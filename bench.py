@@ -228,10 +228,9 @@ def main() -> None:
     # queries[name] stays build+exec so cross-round records compare.
     build_timings: dict[str, dict[str, float]] = {"cold": {}, "warm": {}}
     exec_timings: dict[str, dict[str, float]] = {"cold": {}, "warm": {}}
-    # Fixture-cache disclosure (VERDICT r16 "what's wrong" #2): the
-    # /dev/shm fixture cache persists across invocations on one host, so
-    # report hits vs builds per pass — a pre-warmed "cold" pass is then
-    # self-identifying (cold on a fresh host shows builds>0, hits≈0).
+    # Fixture-cache disclosure: the fixture cache lives for one process,
+    # so the cold pass always builds (builds>0) and later passes of the
+    # same invocation hit it; report hits vs builds per pass.
     from datalake2anomali_spark.plans.protocol_queries import CACHE_COUNTERS
 
     cache_stats: dict[str, dict[str, int]] = {}

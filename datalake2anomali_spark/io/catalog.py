@@ -395,6 +395,8 @@ class MultiTableTransaction:
                 results = {}
                 failure: Exception | None = None
                 for name, fut in zip(names, commit_futs):
+                    if fut.cancelled():
+                        continue  # never started: its head did not move
                     try:
                         results[name] = fut.result()
                     # Exception, not BaseException: a KeyboardInterrupt/

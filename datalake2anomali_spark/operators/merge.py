@@ -18,8 +18,10 @@ the same *dataflow* on raw parquet, and the cost model is identical:
    source row wins *even where its columns are NULL* (real MERGE
    semantics — ``UPDATE SET c = NULL`` must stick), source-only keys are
    INSERTs, and target-only rows in affected partitions copy through.
-3. **Dynamic partition overwrite.** ``partitionOverwriteMode=dynamic``
-   replaces exactly the partitions present in the merged output; a
+3. **Dynamic partition overwrite.** The per-write
+   ``partitionOverwriteMode=dynamic`` option (no session conf is touched,
+   so concurrent writers cannot race on it) replaces exactly the
+   partitions present in the merged output; a
    partition the merge *emptied* (every row moved out) produces no output
    rows, so its stale directory is removed explicitly afterwards (local
    ``shutil``; on a cluster this is the same bounded FileSystem delete a
@@ -49,8 +51,6 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 #: Characters Spark's writer percent-escapes in hive partition directory
 #: names (ExternalCatalogUtils.charToEscape): ASCII control chars plus the
@@ -155,19 +155,12 @@ def merge_into(
     affected_vals = {r[0] for r in affected.collect()}
     merged = merged.localCheckpoint(eager=True)
 
-    prior = spark.conf.get(_OVERWRITE_MODE, None)
-    spark.conf.set(_OVERWRITE_MODE, "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset(_OVERWRITE_MODE)
-        else:
-            spark.conf.set(_OVERWRITE_MODE, prior)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
 
     # Dynamic overwrite only replaces partitions PRESENT in the output; an
     # affected partition the merge emptied (all rows moved elsewhere) keeps

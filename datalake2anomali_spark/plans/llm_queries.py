@@ -1777,15 +1777,13 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums text + numeric columns against the source table — certifying
     the JSON encode/decode round-trips values exactly.
     """
-    import tempfile
-
     from ..io.jsonl import read_jsonl, write_jsonl
+    from .protocol_queries import _scratch_root
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    base = "/dev/shm" if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
-    path = os.path.join(base, "d2a_jsonl_" + sf_dir.strip("/").replace("/", "_"))
+    path = _scratch_root("d2a_jsonl", sf_dir)
     write_jsonl(docs, path, partition_by="lang", n_files=4)
     back = read_jsonl(spark, path).filter(F.col("lang") == "en")
     checksum = F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10).cast("long")
@@ -1937,13 +1935,11 @@ def q_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-range anchors the oracle recomputes straight from the source table.
     A hash match certifies the write→read path loses and alters nothing.
     """
-    import tempfile
-
     from ..io.corpus import read_corpus, write_corpus
+    from .protocol_queries import _scratch_root
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
-    path = os.path.join(base, "d2a_corpus_" + sf_dir.strip("/").replace("/", "_"))
+    path = _scratch_root("d2a_corpus", sf_dir)
     write_corpus(docs, path, partition_by="lang", order_col="doc_id", n_files=4)
     back = read_corpus(spark, path).filter(F.col("lang") == "en")
     checksum = F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10).cast("long")

@@ -10,7 +10,6 @@ mixed-generation schema-on-read (``io/evolution.py``).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,7 +18,7 @@ from ..functions.exact import DSUM_SQL, dsum
 from ..functions.heavy import heavy_hitters
 from ..io.evolution import read_evolving, union_generations
 from ..io.tables import load_table
-from .protocol_queries import shared_fixture_root
+from .protocol_queries import _scratch_root, shared_fixture_root
 from ..operators.layout import (
     scale_to_bits,
     scale_to_bits_sql,
@@ -127,12 +126,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text", "lang", "source", "n_chars")
         .withColumn("quality", (F.length("text") / F.lit(100.0)).cast("double"))
     )
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    root = os.path.join(base, "d2a_evo_" + sf_dir.strip("/").replace("/", "_"))
+    root = _scratch_root("d2a_evo", sf_dir)
     p1, p2 = os.path.join(root, "gen1"), os.path.join(root, "gen2")
     gen1.write.mode("overwrite").parquet(p1)
     gen2.write.mode("overwrite").parquet(p2)
@@ -217,16 +211,11 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    path = os.path.join(base, "d2a_merge_" + sf_dir.strip("/").replace("/", "_"))
+    path = _scratch_root("d2a_merge", sf_dir)
 
     # The operator under test is the MERGE write path — the partitioned
     # reset copy is a cacheable setup prefix (VERDICT r15 task 5): pay
-    # the full partitioned write once per content stamp, then reset
+    # the full partitioned write once per process, then reset
     # per call at hardlink cost.  The merge's dynamic partition
     # overwrite replaces files (new inodes + unlink), never writes into
     # an existing one, so the cached pristine copy is never reachable
@@ -330,7 +319,7 @@ def q_merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The operator under test is the MERGE→OPTIMIZE→VACUUM protocol; the
     # initial `init_table` publish is a cacheable setup prefix (VERDICT
-    # r15 task 5 second tranche): built once per content stamp, cloned
+    # r15 task 5 second tranche): built once per process, cloned
     # per call at hardlink cost — every later commit writes NEW version
     # dirs and vacuum only unlinks the clone's links, so the cached
     # pristine table is never reachable from the mutations.
@@ -405,14 +394,8 @@ def q_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    tag = sf_dir.strip("/").replace("/", "_")
-    src = os.path.join(base, f"d2a_frag_{tag}")
-    dst = os.path.join(base, f"d2a_compact_{tag}")
+    src = _scratch_root("d2a_frag", sf_dir)
+    dst = _scratch_root("d2a_compact", sf_dir)
     e.repartition(8).write.mode("overwrite").partitionBy("event_date").parquet(src)
     spark.catalog.refreshByPath(src)
     after = compact_dataset(

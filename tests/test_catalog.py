@@ -474,3 +474,51 @@ def test_empty_multi_table_txn_commits_nothing(spark, tmp_path):
     base = catalog_manifest(croot)["version"]
     assert MultiTableTransaction(spark, croot, {}).commit() == base
     assert catalog_manifest(croot)["version"] == base
+
+
+def test_multi_table_txn_member_failure_ignores_cancelled_members(
+    spark, tmp_path
+):
+    """More members than the 4-thread commit pool, and the first member's
+    commit fails: the still-queued member commits are cancelled.  A
+    cancelled commit never ran and never moved its head, so it must not
+    be reported as a failed member on the raised error — the recovery
+    path reads those notes to find the members whose head moved."""
+    import time
+
+    from datalake2anomali_spark.io.catalog import MultiTableTransaction
+
+    croot = str(tmp_path / "cat")
+    create_catalog(croot)
+    names = [f"t{i}" for i in range(8)]
+    for n in names:
+        root = str(tmp_path / n)
+        init_table(spark, spark.range(4).withColumn("p", F.lit("a")), root, "p")
+        catalog_register(croot, n, root)
+    base = catalog_manifest(croot)["version"]
+    mtxn = MultiTableTransaction(spark, croot, dict.fromkeys(names, "p"))
+
+    def fail():
+        raise ConcurrentWriteError("t0 commit failed")
+
+    ran = []
+
+    def slow(name, txn):
+        def commit():
+            ran.append(name)
+            time.sleep(1.0)  # keep the pool busy so later members queue
+            return txn._manifest["version"]
+
+        return commit
+
+    mtxn.table("t0").commit = fail
+    for n in names[1:]:
+        t = mtxn.table(n)
+        t.commit = slow(n, t)
+
+    with pytest.raises(ConcurrentWriteError, match="t0 commit failed") as ei:
+        mtxn.commit()
+    assert len(ran) < len(names) - 1, "no member commit was cancelled"
+    notes = getattr(ei.value, "__notes__", [])
+    assert notes == [], notes
+    assert catalog_manifest(croot)["version"] == base

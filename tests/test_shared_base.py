@@ -1,309 +1,33 @@
-"""Pins for the shared-events-base swap/sweep protocol (ADVICE r12).
+"""Pins for the per-process fixture cache (``plans/protocol_queries.py``).
 
-The protocol fixtures share one immutable events table per (sf_dir,
-source content); rebuilds swap a privately-built tree into place and
-NEVER delete a displaced tree synchronously, because Spark resolves
-plan files lazily — a reader that captured the old path can still be
-mid-scan after the swap.  All deletion goes through an age-gated sweep
-(`_sweep_debris`).  These tests pin the three load-bearing behaviors:
-the sweep's age gate and name filter, the displacement-time utime stamp
-(a displaced tree must NOT be sweep-eligible at its BUILD age), and the
-end-to-end rebuild leaving the displaced tree intact and readable while
-the new root serves the fresh stamp.
+Registry fixtures that only READ a scripted table are built once per
+process and key (``shared_fixture_root``); the mutation-protocol fixtures
+clone the one cached events base per call.  These tests pin the cache
+contract — one build per key, a failed build records nothing, a new
+process starts cold and removes its directory at exit, one events base
+serves both clone kinds — and the two safety invariants the cache rests
+on: hardlink-clone mutations never reach the cached tree, and the
+overlapped fixture steps give identical results at any pool size.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import time
+import subprocess
+import sys
+import textwrap
 
-from hypothesis import given, settings, strategies as st
+import pytest
 
-from datalake2anomali_spark.io import publish as pubmod
 from datalake2anomali_spark.plans import protocol_queries as pq
-from datalake2anomali_spark.io.publish import read_manifest
-
-from tests.conftest import hyp_settings
-
-_SETTINGS = hyp_settings()
 
 
-def _mk_tree(path: str, age_sec: float) -> str:
-    os.makedirs(path)
-    with open(os.path.join(path, "part-0.parquet"), "w") as fh:
-        fh.write("x")
-    old = time.time() - age_sec
-    os.utime(path, (old, old))
-    return path
-
-
-_DEAD_PID = 10**9  # beyond any real pid_max: os.kill raises, never alive
-
-
-def test_sweep_debris_is_age_gated_and_name_scoped(tmp_path):
-    root = str(tmp_path / "base")
-    expired_build = _mk_tree(f"{root}.build.{_DEAD_PID}", age_sec=120)
-    expired_stale = _mk_tree(f"{root}.stale.222.9", age_sec=120)
-    fresh_stale = _mk_tree(f"{root}.stale.333.7", age_sec=1)
-    # name-scoped: a sibling that merely shares the prefix string but is
-    # not a .build./.stale. child must survive any age
-    bystander = _mk_tree(str(tmp_path / "base_other"), age_sec=9999)
-
-    pq._sweep_debris(root, grace_sec=60.0)
-
-    assert not os.path.exists(expired_build), "crashed-build debris kept"
-    assert not os.path.exists(expired_stale), "expired displaced tree kept"
-    assert os.path.exists(fresh_stale), "in-grace displaced tree deleted"
-    assert os.path.exists(bystander), "unrelated sibling deleted"
-
-
-def test_sweep_never_takes_a_live_builders_tree(tmp_path):
-    """A builder legitimately slower than the grace period (big sf,
-    starved box) must not have its in-flight .build tree yanked by a
-    concurrent process's sweep — only trees whose owner pid is dead are
-    age-gated, UP TO the hard cap (code-review r13)."""
-    root = str(tmp_path / "base")
-    live = _mk_tree(f"{root}.build.{os.getpid()}", age_sec=120)
-    dead = _mk_tree(f"{root}.build.{_DEAD_PID}", age_sec=120)
-
-    pq._sweep_debris(root, grace_sec=60.0)
-
-    assert os.path.exists(live), "live builder's in-flight tree swept"
-    assert not os.path.exists(dead), "dead builder's debris kept"
-
-
-def test_hard_cap_beats_pid_reuse(tmp_path):
-    """Past the hard cap a .build tree is swept EVEN IF its embedded pid
-    is alive: pid reuse (a recycled pid landing on a long-lived process)
-    must not make crashed-builder debris immortal (code-review r13).
-    Also pins that pid 0 — os.kill(0, 0) signals the caller's own
-    process GROUP and always succeeds — gets no live-pid protection."""
-    root = str(tmp_path / "base")
-    recycled = _mk_tree(
-        f"{root}.build.{os.getpid()}", age_sec=pq._DEBRIS_HARD_CAP_SEC + 60
-    )
-    group = _mk_tree(f"{root}.build.0", age_sec=120)
-
-    pq._sweep_debris(root, grace_sec=60.0)
-
-    assert not os.path.exists(recycled), "over-cap tree kept alive by pid reuse"
-    assert not os.path.exists(group), "pid-0 tree wrongly protected"
-
-
-def test_sweep_is_rate_limited_per_root(tmp_path):
-    """Back-to-back sweeps of the same root skip the directory scan (one
-    listdir per grace window per root — the scan would otherwise sit
-    inside every timed protocol query); a new expired tree appearing
-    between them survives until the window elapses."""
-    root = str(tmp_path / "base")
-    first = _mk_tree(f"{root}.stale.1.1", age_sec=120)
-    pq._sweep_debris(root, grace_sec=60.0)
-    assert not os.path.exists(first)
-
-    second = _mk_tree(f"{root}.stale.2.2", age_sec=120)
-    pq._sweep_debris(root, grace_sec=60.0)  # within the window: skipped
-    assert os.path.exists(second), "rate limiter did not skip the rescan"
-
-    pq._LAST_SWEEP.pop(root, None)  # window elapsed (simulated)
-    pq._sweep_debris(root, grace_sec=60.0)
-    assert not os.path.exists(second)
-
-
-def test_sweep_debris_missing_base_is_noop(tmp_path):
-    pq._sweep_debris(str(tmp_path / "absent" / "base"))  # must not raise
-
-
-def test_rebuild_defers_displaced_tree_and_restamps_it(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Force a rebuild through the real `_shared_events_root` against a
-    private base dir: the displaced old tree must (a) still exist after
-    the swap with its manifest readable — the reader-race guarantee —
-    and (b) carry a DISPLACEMENT-time mtime, not its build-time mtime,
-    so it is not sweep-eligible the instant it is displaced."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-
-    root = pq._shared_events_root(spark, sf_dir)
-    assert root.startswith(str(tmp_path))
-    v0 = read_manifest(root)["version"]
-
-    # cached fast path: same stamp → same root, no stale sibling appears
-    assert pq._shared_events_root(spark, sf_dir) == root
-    assert not [n for n in os.listdir(tmp_path) if ".stale." in n]
-
-    # the fast path SWEEPS: an expired displaced tree from a long-past
-    # rebuild is collected even though no rebuild happens (the leak the
-    # rebuild-only sweep had — code-review r13)
-    leak = _mk_tree(f"{root}.stale.1.1", age_sec=2 * pq._DEBRIS_GRACE_SEC)
-    pq._LAST_SWEEP.pop(root, None)  # sweep window elapsed (simulated)
-    assert pq._shared_events_root(spark, sf_dir) == root
-    assert not os.path.exists(leak), "fast path left the displaced tree"
-
-    # age the root so build-time mtime would be sweep-eligible, then
-    # corrupt the stamp to force the rebuild+swap path
-    old = time.time() - 7200
-    os.utime(root, (old, old))
-    with open(os.path.join(root, "_SOURCE_STAMP"), "w") as fh:
-        fh.write("stale-stamp")
-
-    assert pq._shared_events_root(spark, sf_dir) == root
-
-    stales = [n for n in os.listdir(tmp_path) if ".stale." in n]
-    assert len(stales) == 1, f"displaced tree not deferred: {stales}"
-    displaced = str(tmp_path / stales[0])
-    # the displaced tree is the COMPLETE old root: manifest still reads
-    assert read_manifest(displaced)["version"] == v0
-    # restamped at displacement: within grace despite the 2h-old build
-    assert time.time() - os.stat(displaced).st_mtime < pq._DEBRIS_GRACE_SEC
-    # and the new root serves the fresh stamp + a readable manifest
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    with open(os.path.join(root, "_SOURCE_STAMP")) as fh:
-        assert fh.read() == f"{st.st_mtime_ns}:{st.st_size}"
-    assert read_manifest(root)["version"] == v0
-    # no crashed-build debris left behind by a clean swap
-    assert not [n for n in os.listdir(tmp_path) if ".build." in n]
-
-
-# ---------------------------------------------------------------------------
-# Hypothesis net over the swap/sweep protocol itself.  This round's code
-# review found FIVE defects in two passes of this ~60-line protocol (leak
-# on the fast path, utime-after-rename race, live-builder kill, swallowed
-# collision, duplicate seam) — exactly the defect density that marks code
-# for a property net.  The Spark seams (init_table/read_manifest/_events)
-# are faked at the same module boundaries the crash nets patch, so the
-# REAL swap/sweep code runs over a real filesystem; random op sequences
-# (normal call, crash inside the build, stamp corruption, time passing)
-# then check the protocol's four invariants after every step.
-# ---------------------------------------------------------------------------
-
-_op = st.one_of(
-    st.just(("call",)),
-    st.just(("crash_init",)),
-    st.just(("corrupt_stamp",)),
-    st.just(("age_all",)),
-)
-
-
-class _CrashInit(RuntimeError):
-    pass
-
-
-@settings(**_SETTINGS)
-@given(ops=st.lists(_op, min_size=1, max_size=8))
-def test_swap_sweep_protocol_net(tmp_path_factory, sf_dir, ops):
-    base = str(tmp_path_factory.mktemp("swapnet"))
-    root = os.path.join(base, "d2a_SHARED_events_" + sf_dir.strip("/").replace("/", "_"))
-    grace = pq._DEBRIS_GRACE_SEC
-
-    crash_next = [False]
-
-    def fake_init_table(spark, df, dest, part, **kw):
-        os.makedirs(os.path.join(dest, "v0"))
-        with open(os.path.join(dest, "v0", "part-0.parquet"), "w") as fh:
-            fh.write("data")
-        if crash_next[0]:
-            crash_next[0] = False
-            raise _CrashInit()  # crash AFTER partial write: worst debris
-        with open(os.path.join(dest, "_FAKE_MANIFEST"), "w") as fh:
-            fh.write("0")
-
-    def fake_read_manifest(dest):
-        if not os.path.exists(os.path.join(dest, "_FAKE_MANIFEST")):
-            raise FileNotFoundError(dest)
-        return {"version": 0}
-
-    saved = (pubmod.init_table, pubmod.read_manifest, pq._shared_base_dir, pq._events)
-    pubmod.init_table = fake_init_table
-    pubmod.read_manifest = fake_read_manifest
-    pq._shared_base_dir = lambda: base
-    pq._events = lambda spark, sf: None
-    try:
-        pq._LAST_SWEEP.clear()  # examples must not share sweep windows
-        # a LIVE foreign builder (pid 1 = init, always alive): its
-        # in-flight tree must survive every sweep while under the hard
-        # cap (past the cap the pid-reuse rule rightly takes it)
-        foreign = f"{root}.build.1"
-        os.makedirs(foreign)
-        _backdate(foreign, 2 * grace)  # expired, but under the hard cap
-
-        def siblings(kind):
-            return {
-                os.path.join(base, n)
-                for n in os.listdir(base)
-                if n.startswith(os.path.basename(root) + kind)
-            }
-
-        # the protocol's own tmp name: a rebuild legitimately reclaims
-        # its OWN pid's crashed .build tree at any age (it was never
-        # published, so no reader can hold it) — not covered by I2
-        own_tmp = f"{root}.build.{os.getpid()}"
-        expired: set = set()
-        for op in ops:
-            pre_fresh = (
-                (siblings(".stale.") | siblings(".build."))
-                - expired - {foreign, own_tmp}
-            )
-            if op[0] == "call":
-                got = pq._shared_events_root(None, sf_dir)
-                # I1: a successful call returns a root with the right
-                # stamp and a readable manifest
-                assert got == root
-                assert os.path.exists(os.path.join(root, "_FAKE_MANIFEST"))
-                st_src = os.stat(os.path.join(sf_dir, "events.parquet"))
-                with open(os.path.join(root, "_SOURCE_STAMP")) as fh:
-                    assert fh.read() == f"{st_src.st_mtime_ns}:{st_src.st_size}"
-            elif op[0] == "crash_init":
-                crash_next[0] = True
-                try:
-                    pq._shared_events_root(None, sf_dir)
-                except _CrashInit:
-                    pass
-                crash_next[0] = False
-            elif op[0] == "corrupt_stamp":
-                try:
-                    with open(os.path.join(root, "_SOURCE_STAMP"), "w") as fh:
-                        fh.write("corrupt")
-                except OSError:
-                    pass  # no root right now (after a crash): nothing to corrupt
-            elif op[0] == "age_all":
-                for p in siblings(".stale.") | siblings(".build."):
-                    if p != foreign:
-                        _backdate(p, 2 * grace)
-                        expired.add(p)
-            # I2: no in-grace (un-aged) tree is EVER deleted by any op —
-            # the sweep may only take what time has released
-            for p in pre_fresh - expired:
-                assert os.path.exists(p), f"in-grace tree swept: {p}"
-            # I3: the live foreign builder's tree survives everything
-            assert os.path.exists(foreign), "live builder's tree swept"
-
-        # I4: leak-freedom — once everything is expired AND the sweep's
-        # rate-limit window has elapsed, ONE ordinary call (even the
-        # cached fast path) collects all debris
-        for p in siblings(".stale.") | siblings(".build."):
-            if p != foreign:
-                _backdate(p, 2 * grace)
-        pq._LAST_SWEEP.pop(root, None)  # window elapsed (simulated)
-        pq._shared_events_root(None, sf_dir)
-        leftovers = (siblings(".stale.") | siblings(".build.")) - {foreign, own_tmp}
-        # the call itself may have just displaced a corrupt root: that
-        # tree is fresh by I2, everything older must be gone
-        for p in leftovers:
-            assert time.time() - os.stat(p).st_mtime < grace, f"leaked: {p}"
-    finally:
-        (pubmod.init_table, pubmod.read_manifest,
-         pq._shared_base_dir, pq._events) = saved
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def _backdate(path: str, by_sec: float) -> None:
-    old = time.time() - by_sec
-    os.utime(path, (old, old))
-
-
-# -- shared_fixture_root: the scripted-fixture cache (VERDICT r14 task 3) ----
+@pytest.fixture
+def private_cache(tmp_path, monkeypatch):
+    """An empty cache whose fixtures land in ``tmp_path``."""
+    monkeypatch.setattr(pq, "_PROCESS_DIR", str(tmp_path))
+    monkeypatch.setattr(pq, "_FIXTURES", {})
+    return tmp_path
 
 
 def _fx_build_counter(calls):
@@ -314,370 +38,104 @@ def _fx_build_counter(calls):
     return build
 
 
-def test_shared_fixture_builds_once_per_stamp(tmp_path, monkeypatch):
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
+def _counter_delta(c0: dict) -> dict:
+    return {k: pq.CACHE_COUNTERS[k] - c0[k] for k in c0}
+
+
+def test_shared_fixture_builds_once_per_stamp(private_cache, sf_dir):
     calls = []
-    r1 = pq.shared_fixture_root("fxt", sf, "1", _fx_build_counter(calls))
-    r2 = pq.shared_fixture_root("fxt", sf, "1", _fx_build_counter(calls))
-    assert r1 == r2 and len(calls) == 1
-    # the returned path is the published GENERATION inside the claim root
-    assert os.path.exists(os.path.join(os.path.dirname(r1), "_FIXTURE_COMPLETE"))
-    assert pq._FX_GEN_RE.fullmatch(os.path.basename(r1))
-    # a recipe-version bump rolls the stamp: new path, fresh build
-    r3 = pq.shared_fixture_root("fxt", sf, "2", _fx_build_counter(calls))
+    c0 = dict(pq.CACHE_COUNTERS)
+    r1 = pq.shared_fixture_root("fxt", sf_dir, "1", _fx_build_counter(calls))
+    r2 = pq.shared_fixture_root("fxt", sf_dir, "1", _fx_build_counter(calls))
+    assert r1 == r2 and calls == [r1]
+    assert os.path.dirname(r1) == str(private_cache)
+    with open(os.path.join(r1, "payload.txt")) as fh:
+        assert fh.read() == "built"
+    # a recipe-version bump is a new key: new directory, fresh build
+    r3 = pq.shared_fixture_root("fxt", sf_dir, "2", _fx_build_counter(calls))
     assert r3 != r1 and len(calls) == 2
+    assert _counter_delta(c0) == {"hits": 1, "builds": 2}
 
 
-def test_shared_fixture_code_stamp_rolls_fixture(tmp_path, monkeypatch):
-    """A change in the code-derived stamp component (io sources / Spark
-    version / recipe module — ADVICE r15) rolls the fixture path without
-    any manual version bump."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
+def test_shared_fixture_source_stamp_rolls_fixture(private_cache, tmp_path_factory):
+    """A regenerated source file (new mtime/size stamp) is a new key: the
+    fixture is rebuilt without any version bump."""
+    src = tmp_path_factory.mktemp("src")
+    events = src / "events.parquet"
+    events.write_bytes(b"v1")
     calls = []
-    monkeypatch.setattr(pq, "_code_stamp", lambda rf: "aaaaaaaaaaaa")
-    r1 = pq.shared_fixture_root("fxv", sf, "1", _fx_build_counter(calls))
-    monkeypatch.setattr(pq, "_code_stamp", lambda rf: "bbbbbbbbbbbb")
-    r2 = pq.shared_fixture_root("fxv", sf, "1", _fx_build_counter(calls))
-    assert r1 != r2 and len(calls) == 2
+    r1 = pq.shared_fixture_root("fxv", str(src), "1", _fx_build_counter(calls))
+    events.write_bytes(b"v2-longer")
+    r2 = pq.shared_fixture_root("fxv", str(src), "1", _fx_build_counter(calls))
+    assert r1 != r2 and calls == [r1, r2]
 
 
-def test_code_stamp_tracks_recipe_file_content(tmp_path):
-    """_code_stamp changes when the recipe module's bytes change, and is
-    cached per path (second read hits the cache, not the disk)."""
-    f = tmp_path / "recipe.py"
-    f.write_text("A = 1\n")
-    pq._CODE_STAMP_CACHE.clear()
-    s1 = pq._code_stamp(str(f))
-    f.write_text("A = 2\n")
-    assert pq._code_stamp(str(f)) == s1  # cached: same process, same key
-    pq._CODE_STAMP_CACHE.clear()
-    s2 = pq._code_stamp(str(f))
-    assert s2 != s1
-
-
-def test_shared_fixture_sweep_marks_then_collects(tmp_path, monkeypatch):
-    """Stale-stamp siblings and retired legacy roots are collected a full
-    grace window after they are first OBSERVED stale (the _DISPLACED
-    marker records displacement time) — never on build age alone, which
-    would instant-sweep an old fixture under a concurrent reader the
-    moment its stamp rolls (code-review r15)."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    calls = []
-    r1 = pq.shared_fixture_root("fxs", sf, "1", _fx_build_counter(calls))
-    claim_root = os.path.dirname(r1)
-    name = os.path.basename(claim_root).rsplit(".", 1)[0]
-    stale = _mk_tree(
-        str(tmp_path / f"{name}.deadbeef0002"), age_sec=2 * pq._DEBRIS_GRACE_SEC
-    )
-    legacy = _mk_tree(
-        str(tmp_path / "d2a_cdf_root_testdata_sf0.001"),
-        age_sec=2 * pq._DEBRIS_GRACE_SEC,
-    )
-    other = _mk_tree(str(tmp_path / "d2a_SHAREDFX_other_x.cafe"), age_sec=10**6)
-
-    # first observation: marked displaced, NOT collected (old build age)
-    pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-    assert pq.shared_fixture_root("fxs", sf, "1", _fx_build_counter(calls)) == r1
-    assert os.path.exists(os.path.join(stale, "_DISPLACED"))
-    assert os.path.exists(os.path.join(legacy, "_DISPLACED"))
-    assert os.path.exists(stale) and os.path.exists(legacy)
-
-    # marker still inside the grace window: kept (and the sweep is
-    # rate-limited — without the pop it would not even scan)
-    pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-    pq.shared_fixture_root("fxs", sf, "1", _fx_build_counter(calls))
-    assert os.path.exists(stale) and os.path.exists(legacy)
-
-    # age the markers past the grace: collected
-    old = time.time() - 2 * pq._DEBRIS_GRACE_SEC
-    for p in (stale, legacy):
-        os.utime(os.path.join(p, "_DISPLACED"), (old, old))
-    pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-    pq.shared_fixture_root("fxs", sf, "1", _fx_build_counter(calls))
-    assert not os.path.exists(stale) and not os.path.exists(legacy)
-    assert os.path.exists(other)  # different fixture name: never touched
-    assert os.path.exists(r1) and len(calls) == 1
-
-
-def test_shared_fixture_collects_dead_builder_claim(tmp_path, monkeypatch):
-    """A claim whose _BUILDER pid is dead is collected immediately (a
-    dead builder can never publish); a claim with a LIVE builder is
-    waited on, never collected on wall age below the hard cap."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    calls = []
-    build = _fx_build_counter(calls)
-    r1 = pq.shared_fixture_root("fxc", sf, "1", build)
-    claim = os.path.dirname(r1)
-    # simulate a crashed builder: claim dir + dead-pid _BUILDER, no marker
-    shutil.rmtree(claim)
-    os.makedirs(claim)
-    with open(os.path.join(claim, "_BUILDER"), "w") as fh:
-        fh.write(str(_DEAD_PID))
-    old = time.time() - 30
-    os.utime(claim, (old, old))
-    r2 = pq.shared_fixture_root("fxc", sf, "1", build)
-    # corpse collected, rebuilt at the same claim root (new generation)
-    assert os.path.dirname(r2) == claim and len(calls) == 2
-    assert os.path.exists(os.path.join(claim, "_FIXTURE_COMPLETE"))
-    # a claim with no _BUILDER yet and age under the settle window is a
-    # builder mid-claim: wait (bounded here by patching the deadline)
-    shutil.rmtree(claim)
-    os.makedirs(claim)
-    monkeypatch.setattr(pq, "_FX_CLAIM_SETTLE_SEC", 3600.0)
-    monkeypatch.setattr(pq, "_FX_HARD_CAP_SEC", 0.5)
-    # live-pid claim past the (tiny) hard cap: collected as hung
-    with open(os.path.join(claim, "_BUILDER"), "w") as fh:
-        fh.write(str(os.getpid()))
-    old = time.time() - 30
-    os.utime(claim, (old, old))
-    r3 = pq.shared_fixture_root("fxc", sf, "1", build)
-    assert os.path.dirname(r3) == claim and len(calls) == 3
-
-
-def test_shared_fixture_failed_build_never_publishes(tmp_path, monkeypatch):
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-
+def test_shared_fixture_failed_build_never_publishes(private_cache, sf_dir):
     def boom(root):
         with open(os.path.join(root, "half.txt"), "w") as fh:
             fh.write("partial")
         raise RuntimeError("fixture build failed")
 
-    try:
-        pq.shared_fixture_root("fxf", sf, "1", boom)
-        raise AssertionError("build failure must propagate")
-    except RuntimeError:
-        pass
-    leftovers = [n for n in os.listdir(tmp_path) if n.startswith("d2a_SHAREDFX_fxf")]
-    assert leftovers == []  # no marker, no half-built root stranded
-    # and the path recovers on the next (successful) attempt
+    with pytest.raises(RuntimeError, match="fixture build failed"):
+        pq.shared_fixture_root("fxf", sf_dir, "1", boom)
+    assert os.listdir(private_cache) == []  # partial directory removed
+    assert pq._FIXTURES == {}  # nothing recorded
+    # and the next (successful) attempt builds afresh
     calls = []
-    r = pq.shared_fixture_root("fxf", sf, "1", _fx_build_counter(calls))
-    assert os.path.exists(os.path.join(os.path.dirname(r), "_FIXTURE_COMPLETE"))
-    assert len(calls) == 1
+    r = pq.shared_fixture_root("fxf", sf_dir, "1", _fx_build_counter(calls))
+    assert calls == [r]
+    assert os.listdir(private_cache) == [os.path.basename(r)]
 
 
-def _fx_race_worker(args):
-    """Module-level for pickling: one racing builder process."""
-    base, sidedir, delay = args
-    import os as _os
-    import time as _time
-
-    from datalake2anomali_spark.plans import protocol_queries as _pq
-
-    _pq._shared_base_dir = lambda: base
+_CHILD = textwrap.dedent(
+    """
+    import os, sys
+    from datalake2anomali_spark.plans import protocol_queries as pq
 
     def build(root):
-        # record which process built; slow build widens the race window
-        with open(_os.path.join(sidedir, f"built.{_os.getpid()}"), "w") as fh:
-            fh.write("x")
-        _time.sleep(delay)
-        with open(_os.path.join(root, "payload.txt"), "w") as fh:
-            fh.write(f"by {_os.getpid()}")
+        open(os.path.join(root, "payload.txt"), "w").close()
 
-    return _pq.shared_fixture_root("race", "/root/testdata/sf0.001", "1", build)
-
-
-def test_shared_fixture_race_builds_exactly_once(tmp_path):
-    """Eight real processes race the claim: exactly one builds, everyone
-    returns the same published root, and the payload is intact — the
-    property the code-review r15 hardening exists to protect."""
-    from concurrent.futures import ProcessPoolExecutor
-
-    base = str(tmp_path / "base")
-    sidedir = str(tmp_path / "side")
-    os.makedirs(base)
-    os.makedirs(sidedir)
-    with ProcessPoolExecutor(max_workers=8) as ex:
-        roots = list(ex.map(_fx_race_worker, [(base, sidedir, 0.5)] * 8))
-    assert len(set(roots)) == 1
-    root = roots[0]
-    assert os.path.exists(os.path.join(os.path.dirname(root), "_FIXTURE_COMPLETE"))
-    built = [n for n in os.listdir(sidedir) if n.startswith("built.")]
-    assert len(built) == 1  # exactly one process ran the build
-    with open(os.path.join(root, "payload.txt")) as fh:
-        assert fh.read() == f"by {built[0].split('.')[1]}"
+    pq.shared_fixture_root("fxp", sys.argv[1], "1", build)
+    pq.shared_fixture_root("fxp", sys.argv[1], "1", build)
+    print(pq._process_dir(), pq.CACHE_COUNTERS["builds"], pq.CACHE_COUNTERS["hits"])
+    """
+)
 
 
-# -- r16 hardening: the ADVICE-r15 sweep and zombie-isolation guards ---------
+def test_fixture_cache_is_per_process_and_removed_at_exit(sf_dir):
+    """Each process gets its own ``d2a_fx_*`` directory, so a second
+    process builds again (a cold pass is cold), and the directory is
+    gone once the process exits."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen = []
+    for _ in range(2):
+        out = subprocess.run(
+            [sys.executable, "-c", _CHILD, sf_dir],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.split()
+        d, builds, hits = out[0], int(out[1]), int(out[2])
+        assert os.path.basename(d).startswith("d2a_fx_")
+        assert (builds, hits) == (1, 1)
+        assert not os.path.exists(d), f"{d} outlived its process"
+        seen.append(d)
+    assert seen[0] != seen[1]
 
 
-def test_sweep_spares_live_builder_and_complete_siblings(tmp_path, monkeypatch):
-    """Past the displacement grace, a stale-stamp sibling is still kept
-    when (a) its _BUILDER pid is alive (in-flight build under another
-    stamp epoch — mixed-version concurrency) or (b) it is a COMPLETE
-    fixture below the hard cap (a mixed-version reader may be mid-scan);
-    a dead-builder incomplete sibling is collected (ADVICE r15)."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    calls = []
-    r1 = pq.shared_fixture_root("fxg", sf, "1", _fx_build_counter(calls))
-    name = os.path.basename(os.path.dirname(r1)).rsplit(".", 1)[0]
-    aged = 2 * pq._DEBRIS_GRACE_SEC
-
-    live = _mk_tree(str(tmp_path / f"{name}.aaaaaaaaaaa1"), age_sec=aged)
-    with open(os.path.join(live, "_BUILDER"), "w") as fh:
-        fh.write(f"{os.getpid()}:feedfacefeed")
-    complete = _mk_tree(str(tmp_path / f"{name}.aaaaaaaaaaa2"), age_sec=aged)
-    with open(os.path.join(complete, "_FIXTURE_COMPLETE"), "w") as fh:
-        fh.write("feedfacefeed")
-    dead = _mk_tree(str(tmp_path / f"{name}.aaaaaaaaaaa3"), age_sec=aged)
-    with open(os.path.join(dead, "_BUILDER"), "w") as fh:
-        fh.write(f"{_DEAD_PID}:feedfacefeed")
-    old = time.time() - aged
-    for p in (live, complete, dead):
-        with open(os.path.join(p, "_DISPLACED"), "w") as fh:
-            fh.write(str(old))
-        os.utime(os.path.join(p, "_DISPLACED"), (old, old))
-
-    pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-    pq.shared_fixture_root("fxg", sf, "1", _fx_build_counter(calls))
-    assert os.path.exists(live), "live-builder sibling must survive"
-    assert os.path.exists(complete), "complete sibling must get hard-cap life"
-    assert not os.path.exists(dead), "dead incomplete sibling must be swept"
-
-    # past the hard cap both guards yield: everything goes
-    monkeypatch.setattr(pq, "_FX_HARD_CAP_SEC", 0.5)
-    pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-    pq.shared_fixture_root("fxg", sf, "1", _fx_build_counter(calls))
-    assert not os.path.exists(live) and not os.path.exists(complete)
-    assert len(calls) == 1
-
-
-def test_sweep_matches_exact_sibling_shape(tmp_path, monkeypatch):
-    """Only ``name + "." + 12-hex`` is a sibling: a DIFFERENT fixture
-    whose sanitized sf_dir path dot-extends this one (sf0.001 vs a
-    hypothetical sf0.001.bak) must never be marked or collected
-    (ADVICE r15)."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    calls = []
-    r1 = pq.shared_fixture_root("fxe", sf, "1", _fx_build_counter(calls))
-    name = os.path.basename(os.path.dirname(r1)).rsplit(".", 1)[0]
-    aged = 10**6
-    # live fixture of a dot-extended sf_dir: name + ".bak." + 12-hex
-    foreign = _mk_tree(str(tmp_path / f"{name}.bak.deadbeef0001"), age_sec=aged)
-    # and a non-hex suffix of the right length
-    nothex = _mk_tree(str(tmp_path / f"{name}.notahexstamp"), age_sec=aged)
-    for _ in range(2):  # two sweeps: would mark then collect a match
-        pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-        pq.shared_fixture_root("fxe", sf, "1", _fx_build_counter(calls))
-    assert os.path.exists(foreign) and not os.path.exists(
-        os.path.join(foreign, "_DISPLACED")
-    )
-    assert os.path.exists(nothex) and not os.path.exists(
-        os.path.join(nothex, "_DISPLACED")
-    )
-    assert len(calls) == 1
-
-
-def test_claim_setup_failure_releases_the_claim(tmp_path, monkeypatch):
-    """An OSError in claim SETUP (the _BUILDER write or the generation
-    mkdir, e.g. tmpfs ENOSPC) must release the claim immediately — a
-    leaked live-pid claim would stall every consumer for the full hard
-    cap (code-review r16)."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    real_mkdir = os.mkdir
-
-    def failing_mkdir(path, *a, **kw):
-        if os.path.basename(path).startswith("g") and "d2a_SHAREDFX_fxh" in path:
-            raise OSError(28, "No space left on device", path)
-        return real_mkdir(path, *a, **kw)
-
-    monkeypatch.setattr(os, "mkdir", failing_mkdir)
-    calls = []
-    try:
-        pq.shared_fixture_root("fxh", sf, "1", _fx_build_counter(calls))
-        raise AssertionError("setup failure must propagate")
-    except OSError:
-        pass
-    # the claim root is gone: nothing for another process to wait on
-    assert [n for n in os.listdir(tmp_path) if n.startswith("d2a_SHAREDFX_fxh")] == []
-    # and the next call self-heals instantly (no hard-cap stall)
-    monkeypatch.setattr(os, "mkdir", real_mkdir)
-    r = pq.shared_fixture_root("fxh", sf, "1", _fx_build_counter(calls))
-    assert os.path.exists(os.path.join(os.path.dirname(r), "_FIXTURE_COMPLETE"))
-    assert len(calls) == 1
-
-
-def test_claim_setup_failure_in_builder_write_releases_the_claim(
-    tmp_path, monkeypatch
+def test_events_base_is_built_once_for_both_clone_kinds(
+    spark, sf_dir, monkeypatch
 ):
-    """Same self-heal contract for the OTHER setup step: the _BUILDER
-    write itself failing (builder_landed=False, owner None) must release
-    the claim too (code-review r16, third pass)."""
-    import builtins
-
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    real_open = builtins.open
-
-    def failing_open(path, *a, **kw):
-        if isinstance(path, str) and path.endswith("_BUILDER") and "fxw" in path:
-            raise OSError(28, "No space left on device", path)
-        return real_open(path, *a, **kw)
-
-    monkeypatch.setattr(builtins, "open", failing_open)
-    calls = []
-    try:
-        pq.shared_fixture_root("fxw", sf, "1", _fx_build_counter(calls))
-        raise AssertionError("setup failure must propagate")
-    except OSError:
-        pass
-    monkeypatch.setattr(builtins, "open", real_open)
-    assert [n for n in os.listdir(tmp_path) if n.startswith("d2a_SHAREDFX_fxw")] == []
-    r = pq.shared_fixture_root("fxw", sf, "1", _fx_build_counter(calls))
-    assert os.path.exists(os.path.join(os.path.dirname(r), "_FIXTURE_COMPLETE"))
-    assert len(calls) == 1
-
-
-def test_zombie_generation_is_isolated_and_collected(tmp_path, monkeypatch):
-    """Hard-cap re-claim never shares paths with the zombie's writes: the
-    re-claimed build lands in a NEW generation dir, the zombie's
-    late-arriving files stay in its own generation (published tree
-    unpolluted), its ownership re-check fails, and the dead generation
-    is swept a grace window later (ADVICE r15)."""
-    monkeypatch.setattr(pq, "_shared_base_dir", lambda: str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    calls = []
-    build = _fx_build_counter(calls)
-    r1 = pq.shared_fixture_root("fxz", sf, "1", build)
-    claim = os.path.dirname(r1)
-    name = os.path.basename(claim).rsplit(".", 1)[0]
-    # simulate a hung builder's claim that got collected and re-claimed:
-    # wipe, plant a zombie claim with a half-built generation, age past
-    # the hard cap
-    shutil.rmtree(claim)
-    os.makedirs(os.path.join(claim, "gdeadbeef0001"))
-    with open(os.path.join(claim, "gdeadbeef0001", "half.txt"), "w") as fh:
-        fh.write("zombie partial")
-    with open(os.path.join(claim, "_BUILDER"), "w") as fh:
-        fh.write(f"{os.getpid()}:deadbeef0001")  # live pid: hung, not dead
-    monkeypatch.setattr(pq, "_FX_HARD_CAP_SEC", 0.5)
-    old = time.time() - 30
-    os.utime(claim, (old, old))
-    r2 = pq.shared_fixture_root("fxz", sf, "1", build)
-    assert os.path.dirname(r2) == claim and len(calls) == 2
-    # the zombie now wakes and writes into ITS generation path — the
-    # published generation is a different dir, so nothing lands in it
-    zgen = os.path.join(claim, "gdeadbeef0001")
-    os.makedirs(zgen, exist_ok=True)
-    with open(os.path.join(zgen, "late-write.txt"), "w") as fh:
-        fh.write("zombie late")
-    assert not os.path.exists(os.path.join(r2, "late-write.txt"))
-    # the zombie's ownership re-check fails: it may not publish or clean
-    assert pq._fx_claim_read(claim) != (os.getpid(), "deadbeef0001")
-    # and the dead generation is collected once it ages past the grace
-    aged = time.time() - 2 * pq._DEBRIS_GRACE_SEC
-    os.utime(zgen, (aged, aged))
-    pq._LAST_SWEEP.pop(os.path.join(str(tmp_path), name), None)
-    r3 = pq.shared_fixture_root("fxz", sf, "1", build)
-    assert r3 == r2 and not os.path.exists(zgen) and os.path.exists(r2)
+    """The shallow-clone and hardlink-clone fixtures seed from ONE cached
+    events base: one build, then a hit, and both clones hold the same
+    rows."""
+    monkeypatch.setattr(pq, "_FIXTURES", {})
+    c0 = dict(pq.CACHE_COUNTERS)
+    shallow = pq._cloned_events(spark, "d2a_t_shallow", sf_dir)
+    hard = pq._pristine_versioned_events(spark, "d2a_t_hard", sf_dir)
+    assert _counter_delta(c0) == {"hits": 1, "builds": 1}
+    assert [key[0] for key in pq._FIXTURES] == ["events"]
+    fp_shallow, fp_hard = pq._fingerprint_many(spark, [(shallow, {}), (hard, {})])
+    assert fp_shallow == fp_hard
+    assert fp_shallow[0] == pq._events(spark, sf_dir).count()
 
 
 # -- hardlink-clone purity + overlap determinism (VERDICT r16 tasks 4/5) ------
