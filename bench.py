@@ -169,9 +169,14 @@ def _tail_digest(
     round-over-round or core-scaling comparison needs."""
     out_c: dict[str, float] = {}
     out_w: dict[str, float] = {}
-    used = 0
+    # json.dumps({name: v}) is the entry plus 2 chars — its share of the
+    # braces or the ', ' separator — so the fragments sum exactly to the
+    # serialized map; 2 more are held for a warm map left empty ('{}')
+    used = 2
     for name in sorted(cold, key=lambda n: (-cold[n], n)):
-        cost = 2 * (len(name) + 12)  # '"name": 123.456, ' in both maps
+        cost = len(json.dumps({name: cold[name]}))
+        if name in warm:
+            cost += len(json.dumps({name: warm[name]}))
         if used + cost > budget:
             break
         used += cost

@@ -1500,37 +1500,12 @@ def merge_into_versioned(
         data_cols = data_cols + new_cols
 
     affected = _affected_partitions(target, source, key_cols, partition_col)
-    # validate partition values BEFORE claiming a version (ADVICE r7):
-    # raising after the write would orphan a _v{N} directory whose live
-    # _CLAIM marker blocks vacuum for claim_ttl_seconds — a rejected
-    # write must leave no garbage, same contract as CHECK constraints
-    raw_affected = _collect_partition_strings(affected, partition_col)
-    _require_non_null_partitions(raw_affected)
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    merged = _merge_resolved(hit, source, key_cols, data_cols)
-    # CHECK constraints validate the rows being written (batch-bounded;
-    # untouched partitions were validated by the write that produced them).
-    # The constraint aggregate and the write are two consumers of the
-    # merge join — checkpoint lazily: the constraint aggregate that
-    # immediately follows materializes it inside its own job (one driver
-    # action instead of two, guide §5), and the write reuses the rows.
-    if manifest.get("constraints"):
-        merged = merged.localCheckpoint(eager=False)
-        _check_constraints(merged, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    # fresh claimed directory — no localCheckpoint needed: the plan's input
-    # files are never the write target, the core advantage of immutability
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "merge", merged, commit_hook,
-        ref=ref,
+    return _rewrite_partitions(
+        spark, root, partition_col, manifest, target,
+        _collect_partition_strings(affected, partition_col),
+        lambda hit: _merge_resolved(hit, source, key_cols, data_cols),
+        "merge", ref=ref, commit_hook=commit_hook,
     )
-    return v
 
 
 def sync_versioned(
@@ -1591,32 +1566,21 @@ def sync_versioned(
         .union(doomed.select(partition_col).distinct())
         .distinct()
     )
-    # NULL partitions are rejected here, so the eqNullSafe arm of the
+    # the kernel rejects NULL partitions, so the eqNullSafe arm of the
     # old broadcast join is unreachable and the shared literal-isin
     # selection is equality-identical; the affected list is
     # driver-bounded by the partition count — the same bound the collect
-    # already imposes.
-    raw_affected = _collect_partition_strings(affected, partition_col)
-    _require_non_null_partitions(raw_affected)
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    upserted = _merge_resolved(hit, source, key_cols, data_cols)
-    # subtract the doomed keys: they are target-only, so removing them
-    # from the merged output can never touch an upserted source row
-    merged = upserted.join(doomed.select(*key_cols), key_cols, "left_anti")
-
-    if manifest.get("constraints"):
-        merged = merged.localCheckpoint(eager=False)
-        _check_constraints(merged, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "sync", merged, ref=ref,
+    # already imposes.  The doomed keys are subtracted after the upsert:
+    # they are target-only, so removing them can never touch an upserted
+    # source row.
+    return _rewrite_partitions(
+        spark, root, partition_col, manifest, target,
+        _collect_partition_strings(affected, partition_col),
+        lambda hit: _merge_resolved(hit, source, key_cols, data_cols).join(
+            doomed.select(*key_cols), key_cols, "left_anti"
+        ),
+        "sync", ref=ref,
     )
-    return v
 
 
 def optimize_partitions(
@@ -1642,42 +1606,32 @@ def optimize_partitions(
     ``(published_version, rewritten_partition_values)`` — the current
     version unchanged with ``[]`` when nothing is fragmented.
     """
+    from ..operators.merge import _hive_partition_dir
     from .compact import dataset_file_stats
 
     manifest = read_manifest(root)
-    n_by_pval: dict[str, int] = {}
-    by_version: dict[int, set[str]] = {}
+    # {directory: raw partition values it holds live files for}.
+    # Merge-on-read append-deltas fragment a partition exactly like small
+    # files (every read unions them in) — count them, or an update-heavy
+    # partition never qualifies for OPTIMIZE no matter how bad its read
+    # amplification gets
+    owned_by_dir: dict[str, set[str]] = {}
     for pval, ver in manifest["partitions"].items():
-        by_version.setdefault(int(ver), set()).add(pval)
-    from ..operators.merge import _hive_partition_dir
-
-    for ver, owned in by_version.items():
+        d = _resolve_vdir(root, manifest, int(ver))
+        owned_by_dir.setdefault(d, set()).add(pval)
+    for pval, avs in manifest.get("appends", {}).items():
+        for av in avs:
+            d = os.path.join(_resolve_vdir(root, manifest, int(av)), "_append")
+            owned_by_dir.setdefault(d, set()).add(pval)
+    n_by_pval: dict[str, int] = {}
+    for d, owned in owned_by_dir.items():
         # directory names are hive-ESCAPED; compare against the escaped
         # form of each owned raw value or escapable partitions silently
         # evade fragmentation detection forever
         dir_to_raw = {
             _hive_partition_dir(partition_col, pv): pv for pv in owned
         }
-        for rel, (n_files, _b) in dataset_file_stats(
-            _resolve_vdir(root, manifest, ver)
-        ).items():
-            pv = dir_to_raw.get(rel)
-            if pv is not None:
-                n_by_pval[pv] = n_by_pval.get(pv, 0) + n_files
-    # merge-on-read append-deltas fragment a partition exactly like small
-    # files (every read unions them in) — count them, or an update-heavy
-    # partition never qualifies for OPTIMIZE no matter how bad its read
-    # amplification gets
-    ap_by_version: dict[int, set[str]] = {}
-    for pval, avs in manifest.get("appends", {}).items():
-        for av in avs:
-            ap_by_version.setdefault(int(av), set()).add(pval)
-    for av, owned in ap_by_version.items():
-        adir = os.path.join(_resolve_vdir(root, manifest, av), "_append")
-        dir_to_raw = {
-            _hive_partition_dir(partition_col, pv): pv for pv in owned
-        }
-        for rel, (n_files, _b) in dataset_file_stats(adir).items():
+        for rel, (n_files, _b) in dataset_file_stats(d).items():
             pv = dir_to_raw.get(rel)
             if pv is not None:
                 n_by_pval[pv] = n_by_pval.get(pv, 0) + n_files
@@ -1689,72 +1643,17 @@ def optimize_partitions(
     if not chosen:
         return manifest["version"], []
 
-    target = read_snapshot(spark, root, partition_col)
     # the isin filter partition-prunes at planning time, so the rewrite
     # reads only the chosen partitions; one task per partition coalesces
     # its fragments into a single sorted file
-    hit = (
-        target.filter(F.col(partition_col).cast("string").isin(chosen))
-        .repartition(len(chosen), F.col(partition_col))
-        .sortWithinPartitions(partition_col, order_col)
+    v = _rewrite_partitions(
+        spark, root, partition_col, manifest,
+        read_snapshot(spark, root, partition_col), chosen,
+        lambda hit: hit.repartition(
+            len(chosen), F.col(partition_col)
+        ).sortWithinPartitions(partition_col, order_col),
+        f"optimize({len(chosen)} partitions)",
     )
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    hit.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    written_counts = {
-        str(p): n
-        for p, n in _written_partition_counts(spark, vdir, partition_col).items()
-    }
-    chosen_set = set(chosen)
-    parts = {
-        p: (v if p in chosen_set else ver)
-        for p, ver in manifest["partitions"].items()
-    }
-    rows = dict(manifest.get("rows", {}))
-    rows.update(written_counts)
-    new_manifest = {
-        "version": v,
-        "partitions": parts,
-        "operation": f"optimize({len(chosen)} partitions)",
-        "rows": {p: rows[p] for p in parts if p in rows},
-    }
-    if "constraints" in manifest:
-        new_manifest["constraints"] = manifest["constraints"]
-    if "schema" in manifest:
-        new_manifest["schema"] = manifest["schema"]
-    old_stats = manifest.get("stats")
-    if old_stats:
-        stats_cols = sorted(next(iter(old_stats.values())).keys())
-        kept = {p: st for p, st in old_stats.items() if p not in chosen_set}
-        kept.update(_partition_stats(spark, vdir, partition_col, stats_cols))
-        new_manifest["stats"] = {p: kept[p] for p in parts if p in kept}
-    old_blooms = manifest.get("bloom")
-    if old_blooms:
-        # rebuilt filters must share the table's recorded geometry —
-        # kept and rebuilt bitmaps coexist in one manifest
-        g_m, g_k = _manifest_bloom_geometry(manifest)
-        bloom_cols = _bloom_col_union(old_blooms)
-        keptb = {p: bm for p, bm in old_blooms.items() if p not in chosen_set}
-        keptb.update(
-            _partition_blooms(spark, vdir, partition_col, bloom_cols, m=g_m, k=g_k)
-        )
-        new_manifest["bloom"] = {p: keptb[p] for p in parts if p in keptb}
-        if manifest.get("bloom_geometry"):
-            new_manifest["bloom_geometry"] = dict(manifest["bloom_geometry"])
-    carried_dv = _carry_dv(manifest, chosen_set)
-    if carried_dv:
-        new_manifest["dv"] = carried_dv
-    carried_ap = _carry_appends(manifest, chosen_set)
-    if carried_ap:
-        new_manifest["appends"] = carried_ap
-    if manifest.get("fallback_roots"):
-        new_manifest["fallback_roots"] = list(manifest["fallback_roots"])
-    for log in ("renames", "adds"):
-        if manifest.get(log):
-            new_manifest[log] = list(manifest[log])
-    _commit_checked(root, new_manifest, manifest["version"])
     return v, sorted(chosen)
 
 
@@ -1832,26 +1731,54 @@ def cdc_apply_versioned(
     )
     if bad_ops:
         raise ValueError(f"unknown CDC op values: {bad_ops}")
-    raw_affected = [r["_val"] for r in rows if r["_t"] == 0]
-    _require_non_null_partitions(raw_affected)
-
-    hit = _hit_partitions(target, partition_col, raw_affected)
-    merged = _merge_resolved(hit, ups.select(*data_cols), key_cols, data_cols)
-    merged = merged.join(F.broadcast(dels), key_cols, "left_anti")
-    if manifest.get("constraints"):
-        merged = merged.localCheckpoint(eager=False)
-        _check_constraints(merged, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "cdc_apply", merged,
+    return _rewrite_partitions(
+        spark, root, partition_col, manifest, target,
+        [r["_val"] for r in rows if r["_t"] == 0],
+        lambda hit: _merge_resolved(
+            hit, ups.select(*data_cols), key_cols, data_cols
+        ).join(F.broadcast(dels), key_cols, "left_anti"),
+        "cdc_apply",
     )
-    return v
+
+
+def _check_vector_keys(manifest: dict, key_cols: list[str]) -> None:
+    """A merge-on-read commit's ``key_cols`` must match the key columns
+    the table's existing deletion vectors were written with."""
+    old_dv = manifest.get("dv")
+    if old_dv and old_dv["key_cols"] != list(key_cols):
+        raise ValueError(
+            f"table vectors are keyed by {old_dv['key_cols']}; "
+            f"got {list(key_cols)}"
+        )
+
+
+def _vector_counts(df: DataFrame, partition_col: str) -> dict[str, int]:
+    """{partition: rows} of the rows a merge-on-read commit deletes, in
+    one collect; NULL partitions are refused.  Grouped by the Spark string
+    rendering: these keys become the manifest's dv/appends/deleted keys
+    and must match the hive encoding the read path compares against (see
+    :func:`_collect_partition_strings`)."""
+    rows = (
+        df.groupBy(F.col(partition_col).cast("string").alias(partition_col))
+        .count()
+        .collect()
+    )
+    _require_non_null_partitions([r[0] for r in rows])
+    return {r[0]: int(r[1]) for r in rows}
+
+
+def _grow_vectors(
+    manifest: dict, key_cols: list[str], counts: dict[str, int], v: int
+) -> dict:
+    """The manifest's ``dv`` record after commit ``v`` writes one vector
+    file covering ``counts`` deleted rows per partition."""
+    old_dv = manifest.get("dv") or {}
+    files = {p: list(vs) for p, vs in old_dv.get("files", {}).items()}
+    deleted = dict(old_dv.get("deleted", {}))
+    for p, n in counts.items():
+        files.setdefault(p, []).append(v)
+        deleted[p] = int(deleted.get(p, 0)) + n
+    return {"key_cols": list(key_cols), "files": files, "deleted": deleted}
 
 
 def delete_from_versioned(
@@ -1894,77 +1821,36 @@ def delete_from_versioned(
     if mode == "merge_on_read":
         if not key_cols:
             raise ValueError("merge_on_read delete requires key_cols")
-        old_dv = manifest.get("dv")
-        if old_dv and old_dv["key_cols"] != list(key_cols):
-            raise ValueError(
-                f"table vectors are keyed by {old_dv['key_cols']}; "
-                f"got {list(key_cols)}"
-            )
+        _check_vector_keys(manifest, key_cols)
         doomed = target.filter(condition)
-        # group by the Spark string rendering: these keys become the
-        # manifest's dv/appends/deleted keys and must match the hive
-        # encoding the read path compares against (see
-        # _collect_partition_strings)
-        counts_raw = (
-            doomed.groupBy(
-                F.col(partition_col).cast("string").alias(partition_col)
-            )
-            .count()
-            .collect()
-        )
-        if not counts_raw:
+        counts = _vector_counts(doomed, partition_col)
+        if not counts:
             return manifest["version"]  # nothing to delete: no commit
-        _require_non_null_partitions([r[0] for r in counts_raw])
-        counts = {r[0]: int(r[1]) for r in counts_raw}
 
         v = _claim_version(root)
         doomed.select(partition_col, *key_cols).write.mode("overwrite").parquet(
             _dv_dir(root, v)
         )
-        files = {
-            p: list(vs) for p, vs in (old_dv or {}).get("files", {}).items()
-        }
-        deleted = dict((old_dv or {}).get("deleted", {}))
-        for p, n in counts.items():
-            files.setdefault(p, []).append(v)
-            deleted[p] = int(deleted.get(p, 0)) + n
         new_manifest = dict(manifest)
         new_manifest["version"] = v
         new_manifest["operation"] = "delete_mor"
-        new_manifest["dv"] = {
-            "key_cols": list(key_cols),
-            "files": files,
-            "deleted": deleted,
-        }
+        new_manifest["dv"] = _grow_vectors(manifest, key_cols, counts, v)
         if commit_hook is not None:
             commit_hook()
         _commit_checked(root, new_manifest, manifest["version"], ref=ref)
         return v
 
-    affected_vals = {
-        v
-        for v in _collect_partition_strings(
-            target.filter(condition).select(partition_col).distinct(),
-            partition_col,
-        )
-        if v is not None  # NULL partitions never match the hive keys
-    }
-    if not affected_vals:
-        return manifest["version"]  # nothing to delete: no empty commit
-
-    hit = _hit_partitions(target, partition_col, affected_vals)
-    # NULL-condition rows survive (ANSI DELETE), hence coalesce not ~cond
-    survivors = hit.filter(F.coalesce(~condition, F.lit(True)))
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    survivors.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        affected_vals, "delete", survivors, commit_hook, ref=ref,
+    affected = _collect_partition_strings(
+        target.filter(condition).select(partition_col).distinct(), partition_col
     )
-    return v
+    if not affected:
+        return manifest["version"]  # nothing to delete: no empty commit
+    # NULL-condition rows survive (ANSI DELETE), hence coalesce not ~cond
+    return _rewrite_partitions(
+        spark, root, partition_col, manifest, target, affected,
+        lambda hit: hit.filter(F.coalesce(~condition, F.lit(True))),
+        "delete", ref=ref, commit_hook=commit_hook,
+    )
 
 
 def update_versioned(
@@ -2047,35 +1933,22 @@ def update_versioned(
     raw_affected = _collect_partition_strings(affected, partition_col)
     if not raw_affected:
         return manifest["version"]  # nothing matched: no empty commit
-    _require_non_null_partitions(raw_affected)
-
-    hit = _hit_partitions(target, partition_col, raw_affected)
     # one projection does both halves: matched rows take the SET exprs,
     # survivors pass through — no union, no second scan
-    content = hit.select(
-        *[
-            F.when(cond_true, set_exprs[c].cast(schema[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in data_cols
-        ]
+    return _rewrite_partitions(
+        spark, root, partition_col, manifest, target, raw_affected,
+        lambda hit: hit.select(
+            *[
+                F.when(cond_true, set_exprs[c].cast(schema[c]))
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in data_cols
+            ]
+        ),
+        "update", ref=ref, commit_hook=commit_hook,
     )
-    if manifest.get("constraints"):
-        content = content.localCheckpoint(eager=False)
-        _check_constraints(content, manifest["constraints"])
-
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    content.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-    spark.catalog.refreshByPath(vdir)
-    _commit_ownership_rewrite(
-        spark, root, manifest, v, vdir, partition_col,
-        set(raw_affected), "update", content, commit_hook,
-        ref=ref,
-    )
-    return v
 
 
 def _update_merge_on_read(
@@ -2102,12 +1975,7 @@ def _update_merge_on_read(
             f"merge_on_read UPDATE cannot reassign partition/key columns "
             f"{sorted(frozen)}; use mode='copy_on_write'"
         )
-    old_dv = manifest.get("dv")
-    if old_dv and old_dv["key_cols"] != list(key_cols):
-        raise ValueError(
-            f"table vectors are keyed by {old_dv['key_cols']}; "
-            f"got {list(key_cols)}"
-        )
+    _check_vector_keys(manifest, key_cols)
     # materialize the matched set once: the vector write, the count, and
     # the replacement write below would otherwise each re-run the
     # snapshot scan + predicate (and diverge under a nondeterministic
@@ -2116,19 +1984,9 @@ def _update_merge_on_read(
     # follows materializes it inside its own job — one driver action per
     # commit instead of two (guide §5)
     matched = matched.localCheckpoint(eager=False)
-    # Spark-rendered keys, for the same manifest-key consistency as the
-    # MoR delete arm (see _collect_partition_strings)
-    counts_raw = (
-        matched.groupBy(
-            F.col(partition_col).cast("string").alias(partition_col)
-        )
-        .count()
-        .collect()
-    )
-    if not counts_raw:
+    counts = _vector_counts(matched, partition_col)
+    if not counts:
         return manifest["version"]  # nothing matched: no empty commit
-    _require_non_null_partitions([r[0] for r in counts_raw])
-    counts = {r[0]: int(r[1]) for r in counts_raw}
 
     replacement = matched.select(
         *[
@@ -2153,16 +2011,7 @@ def _update_merge_on_read(
     new_manifest = dict(manifest)
     new_manifest["version"] = v
     new_manifest["operation"] = "update_mor"
-    files = {p: list(vs) for p, vs in (old_dv or {}).get("files", {}).items()}
-    deleted = dict((old_dv or {}).get("deleted", {}))
-    for p, n in counts.items():
-        files.setdefault(p, []).append(v)
-        deleted[p] = int(deleted.get(p, 0)) + n
-    new_manifest["dv"] = {
-        "key_cols": list(key_cols),
-        "files": files,
-        "deleted": deleted,
-    }
+    new_manifest["dv"] = _grow_vectors(manifest, key_cols, counts, v)
     ap = {p: list(vs) for p, vs in (manifest.get("appends") or {}).items()}
     for p in counts:
         ap.setdefault(p, []).append(v)
@@ -2653,7 +2502,7 @@ def _collect_partition_strings(affected: DataFrame, partition_col: str) -> list:
     """The affected partition values as SPARK-rendered strings, in one
     collect.  Rendering with ``cast('string')`` on the cluster — not
     Python ``str()`` on the driver — keeps the hit-selection filter and
-    the ownership comparison in :func:`_commit_ownership_rewrite`
+    the ownership comparison in :func:`_rewrite_partitions`
     consistent with each other and with the hive string encoding the
     write itself produces (Python and Spark renderings diverge for
     boolean/float partition values: ``str(True)`` is ``'True'`` but the
@@ -2682,27 +2531,63 @@ def _hit_partitions(target: DataFrame, partition_col: str, vals) -> DataFrame:
     )
 
 
-def _commit_ownership_rewrite(
+def _rewrite_partitions(
     spark: SparkSession,
     root: str,
-    manifest: dict,
-    v: int,
-    vdir: str,
     partition_col: str,
-    affected_vals: set[str],
+    manifest: dict,
+    base: DataFrame,
+    affected,
+    resolve,
     operation: str,
-    schema_df: DataFrame,
-    commit_hook=None,
+    *,
     ref: str | None = None,
-) -> None:
-    """Shared commit tail for every copy-on-write DML path (MERGE /
-    DELETE / CDC apply): discover the written partitions with their row
-    counts (one scan), apply the ownership rules — untouched partitions
-    keep their version, rewritten/new take ``v``, affected-but-unwritten
-    (emptied) drop — and maintain rows / zone maps / bloom filters /
-    constraints / schema under those same rules before the checked
-    commit.  Keeping this in one place is what stops the three DML
-    writers from drifting apart."""
+    commit_hook=None,
+) -> int:
+    """The one copy-on-write commit: rewrite the ``affected`` partitions
+    (Spark-rendered values, see :func:`_collect_partition_strings`) of
+    ``base`` as ``resolve(hit)`` into a fresh version and publish it.
+    Callers: :func:`merge_into_versioned`, :func:`sync_versioned`,
+    :func:`cdc_apply_versioned`, the copy-on-write arms of
+    :func:`delete_from_versioned` and :func:`update_versioned`,
+    :func:`optimize_partitions` and ``io.transaction.Transaction.commit``
+    — each contributes only its affected-set discovery and its
+    ``resolve``, so the NULL rule, the hit selection, the constraint
+    ordering and the ownership rules cannot drift between them.
+
+    Order: reject NULL partition values and validate CHECK constraints
+    BEFORE claiming a version (ADVICE r7: a rejected write leaves no
+    ``_v{N}`` directory and no ``_CLAIM`` marker); claim, write, refresh;
+    then the ownership rules — untouched partitions keep their version,
+    rewritten/new take the fresh one, affected-but-unwritten (emptied)
+    drop — with rows / zone maps / bloom filters / vectors / append
+    deltas / schema logs maintained under the same rules, and the checked
+    commit.  ``commit_hook`` (tests only) runs immediately before the
+    checked commit.  Returns the published version.  Callers decide what
+    an empty ``affected`` means: an empty rewrite still commits."""
+    # validate partition values BEFORE claiming a version (ADVICE r7):
+    # raising after the write would orphan a _v{N} directory whose live
+    # _CLAIM marker blocks vacuum for claim_ttl_seconds
+    _require_non_null_partitions(affected)
+    affected_vals = set(affected)
+    content = resolve(_hit_partitions(base, partition_col, affected_vals))
+    # CHECK constraints validate the rows being written (batch-bounded;
+    # untouched partitions were validated by the write that produced them).
+    # The constraint aggregate and the write are two consumers of the
+    # content — checkpoint lazily: the aggregate materializes it inside
+    # its own job (one driver action instead of two, guide §5), and the
+    # write reuses the rows.
+    if manifest.get("constraints"):
+        content = content.localCheckpoint(eager=False)
+        _check_constraints(content, manifest["constraints"])
+
+    v = _claim_version(root)
+    vdir = version_dir(root, v)
+    # fresh claimed directory — no checkpoint needed for the write: the
+    # plan's input files are never the write target (immutability)
+    content.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
+    spark.catalog.refreshByPath(vdir)
+
     # distinguish "the rewrite emptied everything" (no parquet files on
     # disk — legal, the partitions drop) from a failing scan (I/O error,
     # corrupt footer): treating the latter as emptied would commit a
@@ -2738,7 +2623,7 @@ def _commit_ownership_rewrite(
         "version": v,
         "partitions": parts,
         "operation": operation,
-        "schema": _schema_record(schema_df),
+        "schema": _schema_record(content),
         "rows": {p: rows[p] for p in parts if p in rows},
     }
     if "constraints" in manifest:
@@ -2805,6 +2690,7 @@ def _commit_ownership_rewrite(
     if commit_hook is not None:
         commit_hook()
     _commit_checked(root, new_manifest, manifest["version"], ref=ref)
+    return v
 
 
 class TableFollower:

@@ -21,11 +21,18 @@ the *scanned* dtype instead of assuming either:
 All branches are codegen'd JVM expressions (or no-ops), so pushdown/pruning
 on the remaining columns is unaffected; the native-timestamp branches keep
 ``ts`` itself pushdown-eligible too (the column is not recomputed).
+
+The module also owns the per-process scratch directory
+(:func:`_process_dir`, :func:`_scratch_root`) that fixtures, scratch
+tables and throwaway streaming checkpoints write into.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +50,36 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+#: This process's scratch directory (see :func:`_process_dir`).
+_PROCESS_DIR: str | None = None
+
+
+def _process_dir() -> str:
+    """One ``d2a_fx_*`` directory per process — on tmpfs when ``/dev/shm``
+    is writable, else the system temp dir — holding every cached fixture,
+    every per-call scratch table and every throwaway streaming checkpoint.
+    Created on first use and removed by an ``atexit`` hook, so nothing
+    outlives the process and a new process always starts cold.  It lives
+    here, below ``plans/`` and ``streaming/``, so both can use it."""
+    global _PROCESS_DIR
+    if _PROCESS_DIR is None:
+        shm = "/dev/shm"
+        base = shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else None
+        _PROCESS_DIR = tempfile.mkdtemp(prefix="d2a_fx_", dir=base)
+        atexit.register(shutil.rmtree, _PROCESS_DIR, ignore_errors=True)
+    return _PROCESS_DIR
+
+
+def _scratch_root(prefix: str, sf_dir: str) -> str:
+    """A per-(fixture, sf) scratch directory, recreated from scratch so the
+    query stays a pure function of the source table."""
+    root = os.path.join(
+        _process_dir(), prefix + "_" + sf_dir.strip("/").replace("/", "_")
+    )
+    shutil.rmtree(root, ignore_errors=True)
+    return root
 
 
 def normalize_events_ts(df: DataFrame, col: str = "ts") -> DataFrame:

@@ -20,9 +20,10 @@ whole batch is ONE Catalyst plan; the only extra per-statement cost is
 the affected-partition discovery action (a distinct-collect of matched
 partition values, driver state bounded by partition count).  At commit
 the final frame restricted to the affected-partition union writes once
-and publishes through the shared ownership tail
-(:func:`..io.publish._commit_ownership_rewrite`): untouched partitions
-keep their version, rewritten/new take the fresh one, emptied drop, and
+and publishes through the copy-on-write kernel every single-statement
+verb shares (:func:`..io.publish._rewrite_partitions`, with the staged
+frame as its base and an identity resolve): untouched partitions keep
+their version, rewritten/new take the fresh one, emptied drop, and
 merge-on-read vectors/append-deltas of rewritten partitions materialize
 and clear.
 
@@ -39,12 +40,11 @@ from pyspark.sql import functions as F
 
 from .publish import (
     _check_constraints,
-    _claim_version,
-    _commit_ownership_rewrite,
+    _hit_partitions,
     _require_non_null_partitions,
+    _rewrite_partitions,
     read_manifest,
     read_snapshot,
-    version_dir,
 )
 
 
@@ -92,12 +92,13 @@ class Transaction:
                 "transaction already committed or rolled back; start a new one"
             )
 
-    def _collect_homes(self, homes_df: DataFrame) -> None:
-        # SPARK-rendered strings (cast, not Python str()): these values
-        # feed the commit's cast('string').isin selection and the
-        # manifest ownership keys, and the two renderings diverge for
-        # boolean/float partition values (see
-        # publish._collect_partition_strings)
+    def _collect_homes(self, homes_df: DataFrame) -> list[str]:
+        """Add the statement's partition values to the affected set and
+        return them.  SPARK-rendered strings (cast, not Python str()):
+        these values feed the commit's cast('string').isin selection and
+        the manifest ownership keys, and the two renderings diverge for
+        boolean/float partition values (see
+        publish._collect_partition_strings)."""
         col = homes_df.columns[0]
         vals = [
             r[0]
@@ -107,6 +108,7 @@ class Transaction:
         ]
         _require_non_null_partitions(vals)
         self._affected.update(vals)
+        return vals
 
     def update(self, condition, set_exprs: dict) -> "Transaction":
         """Stage UPDATE ... SET: TRUE rows take the (type-cast) SET
@@ -170,17 +172,9 @@ class Transaction:
         if extra:
             raise ValueError(f"merge source adds columns {extra}")
         src = source.select(*self._data_cols)
-        homes_df = _affected_partitions(self._df, src, key_cols, self._pcol)
-        homes = [
-            r[0]
-            for r in homes_df.select(
-                F.col(self._pcol).cast("string")
-            )
-            .distinct()
-            .collect()
-        ]
-        _require_non_null_partitions(homes)
-        self._affected.update(homes)
+        homes = self._collect_homes(
+            _affected_partitions(self._df, src, key_cols, self._pcol)
+        )
         # restrict the full-outer resolution to the merge's own
         # partitions — bystander rows pass through untouched, so a
         # one-partition merge joins one partition, not the whole staged
@@ -207,10 +201,10 @@ class Transaction:
         self._check_open()
         if not self._affected or not self._manifest.get("constraints"):
             return
-        content = self._df.filter(
-            F.col(self._pcol).cast("string").isin(sorted(self._affected))
+        _check_constraints(
+            _hit_partitions(self._df, self._pcol, self._affected),
+            self._manifest["constraints"],
         )
-        _check_constraints(content, self._manifest["constraints"])
 
     def rollback(self) -> None:
         """Discard the staged batch.  Nothing was written — this only
@@ -229,21 +223,8 @@ class Transaction:
         if not self._affected:
             return self._manifest["version"]
 
-        content = self._df.filter(
-            F.col(self._pcol).cast("string").isin(sorted(self._affected))
+        return _rewrite_partitions(
+            self._spark, self._root, self._pcol, self._manifest, self._df,
+            self._affected, lambda hit: hit, f"txn({','.join(self._ops)})",
+            ref=self._ref, commit_hook=commit_hook,
         )
-        if self._manifest.get("constraints"):
-            # lazy: the constraint aggregate materializes it (guide §5)
-            content = content.localCheckpoint(eager=False)
-            _check_constraints(content, self._manifest["constraints"])
-
-        v = _claim_version(self._root)
-        vdir = version_dir(self._root, v)
-        content.write.mode("overwrite").partitionBy(self._pcol).parquet(vdir)
-        self._spark.catalog.refreshByPath(vdir)
-        _commit_ownership_rewrite(
-            self._spark, self._root, self._manifest, v, vdir, self._pcol,
-            set(self._affected), f"txn({','.join(self._ops)})", content,
-            commit_hook, ref=self._ref,
-        )
-        return v

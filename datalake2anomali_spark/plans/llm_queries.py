@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io.tables import load_table
+from ..io.tables import _scratch_root, load_table
 from ..llm.dedup import (
     dedup_against,
     dedup_exact,
@@ -1778,7 +1778,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the JSON encode/decode round-trips values exactly.
     """
     from ..io.jsonl import read_jsonl, write_jsonl
-    from .protocol_queries import _scratch_root
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -1936,7 +1935,6 @@ def q_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     A hash match certifies the write→read path loses and alters nothing.
     """
     from ..io.corpus import read_corpus, write_corpus
-    from .protocol_queries import _scratch_root
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     path = _scratch_root("d2a_corpus", sf_dir)

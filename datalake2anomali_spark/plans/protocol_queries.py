@@ -20,7 +20,6 @@ upsert/cursor state machine (``/root/reference/src/Datalake2Anomali.py:
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
 import shutil
@@ -30,42 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import DSUM_SQL, dsum
-from ..io.tables import load_table
+from ..io.tables import _process_dir, _scratch_root, load_table
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-
-
-#: This process's fixture directory (see :func:`_process_dir`).
-_PROCESS_DIR: str | None = None
-
-
-def _process_dir() -> str:
-    """One ``d2a_fx_*`` directory per process — on tmpfs when ``/dev/shm``
-    is writable, else the system temp dir — holding every cached fixture
-    and every per-call scratch table.  Created on first use and removed
-    by an ``atexit`` hook, so nothing outlives the process and a new
-    process always starts cold."""
-    global _PROCESS_DIR
-    if _PROCESS_DIR is None:
-        shm = "/dev/shm"
-        base = shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else None
-        _PROCESS_DIR = tempfile.mkdtemp(prefix="d2a_fx_", dir=base)
-        atexit.register(shutil.rmtree, _PROCESS_DIR, ignore_errors=True)
-    return _PROCESS_DIR
-
-
-def _scratch_root(prefix: str, sf_dir: str) -> str:
-    """A per-(fixture, sf) scratch directory, recreated from scratch so the
-    query stays a pure function of the source table."""
-    root = os.path.join(
-        _process_dir(), prefix + "_" + sf_dir.strip("/").replace("/", "_")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return root
 
 
 def _source_stamp(sf_dir: str, sources: tuple[str, ...] = ("events.parquet",)) -> str:

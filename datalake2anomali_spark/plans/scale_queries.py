@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from ..functions.exact import DSUM_SQL, dsum
 from ..functions.heavy import heavy_hitters
 from ..io.evolution import read_evolving, union_generations
-from ..io.tables import load_table
-from .protocol_queries import _scratch_root, shared_fixture_root
+from ..io.tables import _scratch_root, load_table
+from .protocol_queries import shared_fixture_root
 from ..operators.layout import (
     scale_to_bits,
     scale_to_bits_sql,

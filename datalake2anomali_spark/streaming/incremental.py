@@ -23,14 +23,17 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalake2anomali_spark.io.tables import normalize_events_ts
+from datalake2anomali_spark.io.tables import (
+    _process_dir,
+    _scratch_root,
+    normalize_events_ts,
+)
 from datalake2anomali_spark.session import configure_session
 from datalake2anomali_spark.streaming import windows
 
@@ -68,8 +71,6 @@ def read_events_stream(
     return normalize_events_ts(df)
 
 
-_CKPT_ROOT: str | None = None
-
 #: Memory-sink temp views created by prior :func:`run_to_completion` calls.
 #: A memory sink holds its full result in JVM memory, referenced by (a) the
 #: temp view and (b) the StreamingQueryManager's terminated-query list, so a
@@ -88,16 +89,16 @@ def _scratch_checkpoint_root() -> str:
     delta file per state partition per batch), so a memory-backed filesystem
     cuts the fixed cost of a small availableNow run several-fold — measured
     8.0 s → 2.1 s for the tumbling-counts gate query on this container.
-    Prefers ``/dev/shm`` (tmpfs) and falls back to the default temp dir.
-    Throwaway checkpoints only: a *durable* pipeline checkpoint
-    (:func:`run_tick`) must live on storage that survives restarts, so
-    callers there always pass an explicit ``checkpoint_dir``.
+    It lives in the per-process scratch directory
+    (:func:`..io.tables._process_dir`: tmpfs when ``/dev/shm`` is
+    writable), so it is removed when the process exits.  Throwaway
+    checkpoints only: a *durable* pipeline checkpoint (:func:`run_tick`)
+    must live on storage that survives restarts, so callers there always
+    pass an explicit ``checkpoint_dir``.
     """
-    global _CKPT_ROOT
-    if _CKPT_ROOT is None:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK) else None
-        _CKPT_ROOT = tempfile.mkdtemp(prefix="d2a_ckpt_", dir=base)
-    return _CKPT_ROOT
+    root = os.path.join(_process_dir(), "d2a_ckpt")
+    os.makedirs(root, exist_ok=True)
+    return root
 
 
 def run_to_completion(
@@ -287,18 +288,10 @@ def stream_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match (same oracle as the batch ``incremental_view`` query; the
     streaming path must converge to the identical state).
     """
-    import shutil
-
     e = load_sf_events(spark, sf_dir)
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    tag = sf_dir.strip("/").replace("/", "_")
-    src = os.path.join(base, f"d2a_viewsrc_{tag}")
-    view = os.path.join(base, f"d2a_view_{tag}")
-    shutil.rmtree(view, ignore_errors=True)  # pure function of the source
+    # fresh dirs each call: a pure function of the source
+    src = _scratch_root("d2a_viewsrc", sf_dir)
+    view = _scratch_root("d2a_view", sf_dir)
     e.repartition(3).write.mode("overwrite").parquet(src)
     spark.catalog.refreshByPath(src)
 
@@ -377,9 +370,7 @@ def _build_late_replay_input(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import shutil
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(_scratch_checkpoint_root(), f"late_replay_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("d2a_late_replay", sf_dir)
     inp = os.path.join(root, "input")
     os.makedirs(inp)
 
@@ -643,22 +634,13 @@ def stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     across micro-batch boundaries included (also pinned in
     tests/test_streaming.py).
     """
-    import shutil
-
     e = load_sf_events(spark, sf_dir).select(
         "user_id", "ts", "event_type", "event_id"
     )
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    tag = sf_dir.strip("/").replace("/", "_")
-    src = os.path.join(base, f"d2a_scd2src_{tag}")
-    hist = os.path.join(base, f"d2a_scd2hist_{tag}")
-    ckpt = os.path.join(base, f"d2a_scd2ckpt_{tag}")
-    for p in (src, hist, ckpt):  # pure function of the source table
-        shutil.rmtree(p, ignore_errors=True)
+    # fresh dirs each call: a pure function of the source table
+    src = _scratch_root("d2a_scd2src", sf_dir)
+    hist = _scratch_root("d2a_scd2hist", sf_dir)
+    ckpt = _scratch_root("d2a_scd2ckpt", sf_dir)
 
     lo, hi = e.agg(
         F.min(F.expr("unix_micros(ts)")), F.max(F.expr("unix_micros(ts)"))
@@ -813,25 +795,16 @@ def stream_upsert_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot aggregate must hash-match the plain batch rollup of the
     source table — any duplicate or dropped batch effect would break it.
     """
-    import shutil
-
     from ..io.publish import init_table, merge_into_versioned, read_snapshot
 
     e = load_sf_events(spark, sf_dir).withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    tag = sf_dir.strip("/").replace("/", "_")
-    src = os.path.join(base, f"d2a_eosrc_{tag}")
-    root = os.path.join(base, f"d2a_eotable_{tag}")
-    ckpt = os.path.join(base, f"d2a_eockpt_{tag}")
-    ledger = os.path.join(base, f"d2a_eoledger_{tag}")
-    for p in (src, root, ckpt, ledger):  # pure function of the source
-        shutil.rmtree(p, ignore_errors=True)
+    # fresh dirs each call: a pure function of the source
+    src = _scratch_root("d2a_eosrc", sf_dir)
+    root = _scratch_root("d2a_eotable", sf_dir)
+    ckpt = _scratch_root("d2a_eockpt", sf_dir)
+    ledger = _scratch_root("d2a_eoledger", sf_dir)
 
     # seed the table with the earliest third so every batch is a true
     # MERGE against existing state, then stream the rest in two ticks
@@ -953,20 +926,11 @@ def stream_enrich_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     is therefore a deterministic mix of both dim versions, which the
     oracle replays with a CASE on (tick, user parity).
     """
-    import shutil
-
     from datalake2anomali_spark.functions.exact import dsum
     from datalake2anomali_spark.io.publish import init_table, merge_into_versioned
 
     e = load_sf_events(spark, sf_dir)
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(base, f"d2a_enrich_{tag}")
-    shutil.rmtree(root, ignore_errors=True)  # pure function of the source
+    root = _scratch_root("d2a_enrich", sf_dir)  # pure function of the source
     src = os.path.join(root, "src")
     dim_root = os.path.join(root, "dim")
     out = os.path.join(root, "out")
@@ -1046,19 +1010,10 @@ def stream_into_hidden(spark: SparkSession, sf_dir: str) -> DataFrame:
     both halves of the contract: batches landed exactly once, and the
     hidden read returns precisely the predicate window.
     """
-    import shutil
-
     from ..io.hidden import init_hidden_table, merge_into_hidden, read_hidden
 
     e = load_sf_events(spark, sf_dir)
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    tag = sf_dir.strip("/").replace("/", "_")
-    top = os.path.join(base, f"d2a_streamhid_{tag}")
-    shutil.rmtree(top, ignore_errors=True)  # pure function of the source
+    top = _scratch_root("d2a_streamhid", sf_dir)  # pure function of the source
     src = os.path.join(top, "src")
     root = os.path.join(top, "table")
     ckpt = os.path.join(top, "ckpt")

@@ -164,16 +164,9 @@ def _build_sliced_replay(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import shutil
 
-    from datalake2anomali_spark.io.tables import load_table
+    from datalake2anomali_spark.io.tables import _scratch_root, load_table
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(
-        os.environ.get("TMPDIR", "/dev/shm")
-        if os.path.isdir("/dev/shm")
-        else "/tmp",
-        f"d2a_sliced_{tag}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root("d2a_sliced", sf_dir)
     inp = os.path.join(root, "input")
     os.makedirs(inp)
     e = load_table(spark, sf_dir, "events")

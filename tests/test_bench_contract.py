@@ -76,3 +76,27 @@ def test_operator_loop_names_are_registered():
     import __spark_entry__ as entrymod
 
     assert set(bench.OPERATOR_LOOP) <= set(entrymod.queries())
+
+
+def test_tail_digest_fits_budget_with_long_values():
+    """The digest budget holds for the serialized maps themselves, also
+    when a value renders to 9+ chars (``12345.678``): a fixed per-entry
+    estimate undercounts those and overruns the budget."""
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    import bench
+
+    cold = {f"query_{i:03d}": 10000.001 + i for i in range(60)}
+    warm = {name: 20000.002 + i for i, name in enumerate(cold)}
+    budget = 1150
+    dig_c, dig_w = bench._tail_digest(cold, warm, budget=budget)
+    assert dig_c and dig_w
+    assert len(json.dumps(dig_c)) + len(json.dumps(dig_w)) <= budget
+    # biggest cold rows first, and as many as fit
+    assert list(dig_c) == sorted(cold, key=lambda n: -cold[n])[: len(dig_c)]
+    nxt = sorted(cold, key=lambda n: -cold[n])[len(dig_c)]
+    more_c = {**dig_c, nxt: cold[nxt]}
+    more_w = {**dig_w, nxt: warm[nxt]}
+    assert len(json.dumps(more_c)) + len(json.dumps(more_w)) > budget - 2

@@ -1939,3 +1939,222 @@ def test_bloom_rebuild_keeps_all_null_columns(spark, tmp_path):
     assert "b" in after["1"], "all-NULL partition must not drop b table-wide"
     # and the b-probe still finds its row through the rebuilt metadata
     assert read_snapshot(spark, root, "p", eq_predicate=("b", 10_001)).count() == 1
+
+
+# -- the shared copy-on-write kernel ------------------------------------------
+#
+# Every partition-rewriting verb commits through publish._rewrite_partitions.
+# The table below has zone maps on ``v``, a bloom filter on ``id``, one
+# merge-on-read delete vector and one merge-on-read update append on p1 and
+# p3, and p3 spread over two files (three with its append) so partial
+# OPTIMIZE picks it alone.  Each verb rewrites p3; p0-p2 stay untouched.
+
+
+def _kernel_verb(spark, root, verb):
+    """Run ``verb`` against p3 and return the version it published."""
+    from datalake2anomali_spark.io.publish import (
+        cdc_apply_versioned,
+        delete_from_versioned,
+        optimize_partitions,
+        sync_versioned,
+        update_versioned,
+    )
+    from datalake2anomali_spark.io.transaction import Transaction
+
+    if verb == "merge":
+        src = spark.createDataFrame(
+            [(11, 1111, "p3"), (100, 1000, "p3")], "id long, v long, p string"
+        )
+        return merge_into_versioned(spark, root, src, ["id"], "p")
+    if verb == "sync":
+        src = (
+            read_snapshot(spark, root, "p")
+            .filter((F.col("p") == "p3") & (F.col("id") != 15))
+            .withColumn(
+                "v", F.when(F.col("id") == 19, F.lit(1919)).otherwise(F.col("v"))
+            )
+        )
+        return sync_versioned(
+            spark, root, src, ["id"], "p", delete_condition=F.col("p") == "p3"
+        )
+    if verb == "cdc":
+        changes = spark.createDataFrame(
+            [(11, 1111, "p3", "upsert"), (15, None, "p3", "delete")],
+            "id long, v long, p string, _op string",
+        )
+        return cdc_apply_versioned(spark, root, changes, ["id"], "p")
+    if verb == "delete":
+        return delete_from_versioned(spark, root, "p", F.col("id") == 15)
+    if verb == "update":
+        return update_versioned(
+            spark, root, "p", F.col("id") == 11, {"v": F.lit(1111)}
+        )
+    if verb == "txn":
+        return (
+            Transaction(spark, root, "p")
+            .update(F.col("id") == 11, {"v": F.lit(1111)})
+            .delete(F.col("id") == 15)
+            .commit()
+        )
+    assert verb == "optimize"
+    v, chosen = optimize_partitions(spark, root, "p", "id", min_files=3)
+    assert chosen == ["p3"]
+    return v
+
+
+#: verb -> (upserted {id: v}, deleted ids); every touched id lives in p3.
+_KERNEL_MODEL = {
+    "merge": ({11: 1111, 100: 1000}, set()),
+    "sync": ({19: 1919}, {15}),
+    "cdc": ({11: 1111}, {15}),
+    "delete": ({}, {15}),
+    "update": ({11: 1111}, set()),
+    "txn": ({11: 1111}, {15}),
+    "optimize": ({}, set()),
+}
+
+
+@pytest.fixture(scope="module")
+def kernel_base(spark, tmp_path_factory):
+    from datalake2anomali_spark.io.publish import (
+        delete_from_versioned,
+        update_versioned,
+    )
+
+    root = str(tmp_path_factory.mktemp("kernel") / "base")
+    # one write task per range slice: ids 40-43 (all p3) land in two more
+    # files (equal single-slice children would be zipped into one task)
+    ids = spark.range(0, 40, 1, 1).union(spark.range(40, 44, 1, 2))
+    df = ids.select(
+        "id",
+        (F.col("id") * 10).alias("v"),
+        F.when(F.col("id") >= 40, F.lit("p3"))
+        .otherwise(F.concat(F.lit("p"), (F.col("id") % 4).cast("string")))
+        .alias("p"),
+    )
+    init_table(spark, df, root, "p", stats_cols=["v"], bloom_cols=["id"])
+    delete_from_versioned(
+        spark, root, "p", F.col("id").isin(1, 3),
+        mode="merge_on_read", key_cols=["id"],
+    )
+    update_versioned(
+        spark, root, "p", F.col("id").isin(5, 7), {"v": F.col("v") + 1},
+        mode="merge_on_read", key_cols=["id"],
+    )
+    m = read_manifest(root)
+    assert set(m["dv"]["files"]) == set(m["appends"]) == {"p1", "p3"}
+    p3_dir = os.path.join(version_dir(root, 1), "p=p3")
+    assert sum(f.endswith(".parquet") for f in os.listdir(p3_dir)) == 3
+    return root
+
+
+def _rows(spark, root):
+    return sorted(
+        (r["id"], r["v"], r["p"])
+        for r in read_snapshot(spark, root, "p").collect()
+    )
+
+
+@pytest.mark.parametrize("verb", sorted(_KERNEL_MODEL))
+def test_rewrite_kernel_contract(spark, kernel_base, tmp_path, verb):
+    """The commit contract every copy-on-write verb shares: metadata keys
+    stay within the live partitions, the rewritten partition takes the new
+    version and sheds its vectors and appends, untouched partitions keep
+    theirs, and the snapshot matches a model of the verb."""
+    import shutil
+
+    root = str(tmp_path / "t")
+    shutil.copytree(kernel_base, root)
+    before = read_manifest(root)
+    upserts, deletes = _KERNEL_MODEL[verb]
+    model = {i: (v, p) for i, v, p in _rows(spark, root) if i not in deletes}
+    model.update({i: (v, "p3") for i, v in upserts.items()})
+
+    nv = _kernel_verb(spark, root, verb)
+
+    m = read_manifest(root)
+    assert m["version"] == nv > before["version"]
+    for key in ("rows", "stats", "bloom"):
+        assert set(m[key]) <= set(m["partitions"]), key
+    assert m["partitions"]["p3"] == nv
+    assert "p3" not in m.get("dv", {}).get("files", {})
+    assert "p3" not in m.get("dv", {}).get("deleted", {})
+    assert "p3" not in m.get("appends", {})
+    for p in ("p0", "p1", "p2"):
+        assert m["partitions"][p] == before["partitions"][p], p
+        assert m["rows"][p] == before["rows"][p], p
+        assert m["stats"][p] == before["stats"][p], p
+        assert m["bloom"][p] == before["bloom"][p], p
+    assert m["dv"]["files"]["p1"] == before["dv"]["files"]["p1"]
+    assert m["dv"]["deleted"]["p1"] == before["dv"]["deleted"]["p1"]
+    assert m["appends"]["p1"] == before["appends"]["p1"]
+
+    got = _rows(spark, root)
+    assert got == sorted((i, v, p) for i, (v, p) in model.items())
+    # the rewritten partition's metadata describes exactly its new rows
+    p3 = [v for _i, v, p in got if p == "p3"]
+    assert m["rows"]["p3"] == len(p3)
+    assert m["stats"]["p3"]["v"] == [min(p3), max(p3)]
+
+
+@pytest.mark.parametrize("verb", sorted(_KERNEL_MODEL))
+def test_rewrite_kernel_constraint_leaves_no_claim(
+    spark, kernel_base, tmp_path, verb
+):
+    """A rewrite that fails a CHECK constraint is refused before any
+    version is claimed: no ``_v{N}`` directory, no ``_CLAIM`` marker.
+    The constraint is recorded straight into the manifest — no public
+    call adds one to a table whose rows already fail it, and DELETE and
+    OPTIMIZE can only ever write rows that already exist."""
+    import json
+    import shutil
+
+    from datalake2anomali_spark.io.publish import (
+        MANIFEST,
+        ConstraintViolationError,
+    )
+
+    root = str(tmp_path / "t")
+    shutil.copytree(kernel_base, root)
+    m = read_manifest(root)
+    m["constraints"] = {"p3_frozen": "p <> 'p3'"}
+    with open(os.path.join(root, MANIFEST), "w", encoding="utf-8") as fh:
+        json.dump(m, fh)
+    listing = sorted(os.listdir(root))
+
+    with pytest.raises(ConstraintViolationError, match="p3_frozen"):
+        _kernel_verb(spark, root, verb)
+    assert sorted(os.listdir(root)) == listing
+    assert read_manifest(root)["version"] == m["version"]
+
+
+def test_optimize_drops_fully_vector_deleted_partition(spark, tmp_path):
+    """A fragmented partition whose every row is vector-deleted rewrites
+    to nothing: partial OPTIMIZE drops it (the shared ownership rule for
+    an emptied partition) instead of failing to infer a schema from its
+    empty version directory."""
+    from datalake2anomali_spark.io.publish import (
+        delete_from_versioned,
+        optimize_partitions,
+        snapshot_rowcount,
+    )
+
+    root = str(tmp_path / "t")
+    # p="b" (ids 8-11) spans two write tasks, so it counts as fragmented
+    ids = spark.range(0, 8, 1, 1).union(spark.range(8, 12, 1, 2))
+    df = ids.select(
+        "id", F.when(F.col("id") >= 8, "b").otherwise("a").alias("p")
+    )
+    init_table(spark, df, root, "p")
+    delete_from_versioned(
+        spark, root, "p", F.col("p") == "b",
+        mode="merge_on_read", key_cols=["id"],
+    )
+    v, chosen = optimize_partitions(spark, root, "p", "id", min_files=2)
+    assert chosen == ["b"]
+    m = read_manifest(root)
+    assert m["version"] == v
+    assert m["partitions"] == {"a": 1} and m["rows"] == {"a": 8}
+    assert "dv" not in m
+    assert snapshot_rowcount(root) == 8
+    assert read_snapshot(spark, root, "p").count() == 8

@@ -19,13 +19,14 @@ import textwrap
 
 import pytest
 
+from datalake2anomali_spark.io import tables
 from datalake2anomali_spark.plans import protocol_queries as pq
 
 
 @pytest.fixture
 def private_cache(tmp_path, monkeypatch):
     """An empty cache whose fixtures land in ``tmp_path``."""
-    monkeypatch.setattr(pq, "_PROCESS_DIR", str(tmp_path))
+    monkeypatch.setattr(tables, "_PROCESS_DIR", str(tmp_path))
     monkeypatch.setattr(pq, "_FIXTURES", {})
     return tmp_path
 

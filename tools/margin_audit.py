@@ -121,51 +121,38 @@ def audit_snapshot_bloom(spark, sf_dir: str) -> dict:
     rate).  Correctness never depends on this — a saturated filter only
     stops skipping — but the I/O advice is the operator's point, so its
     decay with per-partition key count is the scale signal."""
-    import shutil
-    import tempfile
-
     from datalake2anomali_spark.io.publish import (
         _bloom_may_contain,
         _manifest_bloom_geometry,
         init_table,
         read_manifest,
     )
+    from datalake2anomali_spark.io.tables import _scratch_root
 
     e = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.date_format("ts", "yyyy-MM-dd")
     )
-    base = (
-        "/dev/shm"
-        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-        else tempfile.gettempdir()
-    )
-    root = os.path.join(
-        base, "d2a_bloomaudit_" + sf_dir.strip("/").replace("/", "_")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    # try/finally so a failed build/probe never strands the table copy
-    # in tmpfs (ADVICE r14)
-    try:
-        init_table(spark, e, root, "event_date", bloom_cols=["event_id"])
-        manifest = read_manifest(root)
-        blooms = manifest["bloom"]
-        m, k = _manifest_bloom_geometry(manifest)
-        hi = e.agg(F.max("event_id")).collect()[0][0]
-        keys_per_part = (
-            e.groupBy("event_date").agg(F.countDistinct("event_id").alias("d"))
-        ).agg(F.max("d"), F.avg("d")).collect()[0]
-        probes = [int(hi) + 1 + i for i in range(200)]
-        tested = fps = 0
-        for pval, cols in blooms.items():
-            hx = cols.get("event_id")
-            if hx is None:
-                continue
-            for v in probes:
-                tested += 1
-                if _bloom_may_contain(hx, v, m=m, k=k):
-                    fps += 1
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # the per-process scratch dir is removed at exit, so a failed build
+    # or probe never strands the table copy in tmpfs (ADVICE r14)
+    root = _scratch_root("d2a_bloomaudit", sf_dir)
+    init_table(spark, e, root, "event_date", bloom_cols=["event_id"])
+    manifest = read_manifest(root)
+    blooms = manifest["bloom"]
+    m, k = _manifest_bloom_geometry(manifest)
+    hi = e.agg(F.max("event_id")).collect()[0][0]
+    keys_per_part = (
+        e.groupBy("event_date").agg(F.countDistinct("event_id").alias("d"))
+    ).agg(F.max("d"), F.avg("d")).collect()[0]
+    probes = [int(hi) + 1 + i for i in range(200)]
+    tested = fps = 0
+    for pval, cols in blooms.items():
+        hx = cols.get("event_id")
+        if hx is None:
+            continue
+        for v in probes:
+            tested += 1
+            if _bloom_may_contain(hx, v, m=m, k=k):
+                fps += 1
     return {
         "gate": "snapshot_bloom_scan",
         "m_bits": m,
