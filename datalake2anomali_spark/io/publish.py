@@ -584,41 +584,28 @@ def _footer_partition_files(
     return out
 
 
-def _written_partition_counts(
-    spark: SparkSession, vdir: str, partition_col: str
-) -> dict:
-    """{raw_pval: row_count} over a freshly written version directory.
+def _ddl(columns) -> str:
+    """A ``[[name, DDL type], ...]`` record as a schema DDL string."""
+    return ", ".join(
+        "`{}` {}".format(n.replace("`", "``"), t) for n, t in columns
+    )
 
-    Fast path: parquet FOOTER metadata (``num_rows`` per file summed per
-    hive directory) — exactly what every table format derives at commit
-    time from the files it just wrote, metadata-scale I/O instead of a
-    data rescan (at 100 TB the commit must not re-read its own write; the
-    footer list is bounded by the commit's file count).  Falls back to
-    the historical one-job Spark scan whenever the layout or a partition
-    value's rendering is not provably identical (guard:
-    :func:`_partition_value_renders_verbatim`)."""
-    by_part = _footer_partition_files(vdir, partition_col)
-    if by_part:  # empty dict falls through: the scan raises the
-        # historical no-files-to-infer-schema error
-        import pyarrow.parquet as pq
+
+def _read_pinned(spark: SparkSession, path: str, columns) -> DataFrame:
+    """``spark.read.parquet(path)`` with the data schema given up front —
+    ``columns`` as recorded ``[name, DDL type]`` pairs — so planning runs
+    no footer schema-inference job.  Hive partition columns are left out
+    of ``columns`` and still inferred from the directory names, exactly
+    as an unpinned read types them.  No record, or one whose DDL does not
+    parse, reads through inference."""
+    if columns:
+        from pyspark.errors import ParseException
 
         try:
-            return {
-                p: sum(pq.read_metadata(f).num_rows for f in files)
-                for p, files in by_part.items()
-            }
-        except Exception:
-            pass  # unreadable footer: the scan will surface the real error
-    # scan fallback groups by the SPARK string rendering so its keys
-    # match the footer path's raw hive-dir strings and the manifest keys
-    # for every partition type (Python str() diverges for bool/float)
-    return {
-        r[0]: r[1]
-        for r in spark.read.parquet(vdir)
-        .groupBy(F.col(partition_col).cast("string").alias(partition_col))
-        .agg(F.count(F.lit(1)))
-        .collect()
-    }
+            return spark.read.schema(_ddl(columns)).parquet(path)
+        except ParseException:
+            pass
+    return spark.read.parquet(path)
 
 
 def version_dir(root: str, version: int) -> str:
@@ -793,38 +780,6 @@ def _or_bloom_hex(a: str, b: str) -> str:
     return format(int(a, 16) | int(b, 16), f"0{width}x")
 
 
-def _partition_stats(
-    spark: SparkSession,
-    vdir: str,
-    partition_col: str,
-    stats_cols: list[str],
-) -> dict[str, dict[str, list]]:
-    """Per-partition ``{pval: {col: [min, max]}}`` over a freshly written
-    version directory — ONE aggregate scan of exactly the partitions the
-    writer just produced, collected driver-side bounded by partition
-    count.  This is the zone-map half of a table format's metadata:
-    min/max per partition for NON-partition columns, so readers can skip
-    partitions on predicates the directory layout can't prune."""
-    footer = _footer_partition_stats(vdir, partition_col, stats_cols)
-    if footer is not None:
-        return footer
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    rows = (
-        spark.read.parquet(vdir)
-        .groupBy(F.col(partition_col).cast("string").alias(partition_col))
-        .agg(*aggs)
-        .collect()
-    )
-    return {
-        str(r[partition_col]): {
-            c: [r[f"_lo_{c}"], r[f"_hi_{c}"]] for c in stats_cols
-        }
-        for r in rows
-    }
-
-
 #: Arrow type ids whose parquet chunk statistics are exact and whose
 #: Python renderings match Spark's collect() values: signed/unsigned
 #: integers (pyarrow type ids 2-9 → int) and float32/float64 (10-12 →
@@ -833,20 +788,24 @@ def _partition_stats(
 _FOOTER_STATS_EXACT_KINDS = ("int", "float", "double")
 
 
-def _footer_partition_stats(
+def _footer_metadata(
     vdir: str, partition_col: str, stats_cols: list[str]
-) -> dict[str, dict[str, list]] | None:
-    """Zone maps from parquet FOOTER statistics — the metadata-only twin
-    of the Spark-scan aggregate (guide §1/§6: the commit should not
-    re-read the data it just wrote; chunk min/max for integral and
-    floating columns is exact, and parquet-mr omits the stats entirely
-    for NaN-polluted double chunks, which routes those to the fallback).
+) -> tuple[dict[str, int], dict[str, dict[str, list]]] | None:
+    """``(rows, stats)`` of a freshly written version directory from
+    parquet FOOTERS alone: ``num_rows`` summed per hive directory, and
+    zone maps from chunk statistics — what every table format derives at
+    commit time from the files it just wrote, metadata-scale I/O instead
+    of a data rescan (chunk min/max for integral and floating columns is
+    exact; a NaN-polluted double chunk has no exact bounds — writers
+    either omit them or, as parquet-mr does, record a NaN max that hides
+    the largest real value — so it routes to the scan).
 
-    Returns None whenever ANY condition needed for bit-identical results
-    is not provable: unrecognized layout, ambiguous partition rendering,
-    a missing/none statistics object on a chunk holding non-null values,
-    a non-numeric column type, or a column absent from a file's schema.
-    All-null chunks (null_count == num rows) legitimately carry no
+    Returns None whenever ANY condition needed for results bit-identical
+    to the Spark scan is not provable: no files, unrecognized layout,
+    ambiguous partition rendering (:func:`_partition_value_renders_verbatim`),
+    an unreadable footer, a missing/none statistics object on a chunk
+    holding non-null values, a NaN bound, a non-numeric column type, or a
+    column absent from a file's schema.  All-null chunks legitimately carry no
     min/max and contribute nothing; a partition whose every chunk is
     all-null yields [None, None], exactly like the scan's min/max."""
     by_part = _footer_partition_files(vdir, partition_col)
@@ -854,13 +813,18 @@ def _footer_partition_stats(
         return None
     import pyarrow.parquet as pq
 
-    out: dict[str, dict[str, list]] = {}
+    rows: dict[str, int] = {}
+    stats: dict[str, dict[str, list]] = {}
     try:
         for p, files in by_part.items():
+            rows[p] = 0
             lo: dict[str, object] = {c: None for c in stats_cols}
             hi: dict[str, object] = {c: None for c in stats_cols}
             for fpath in files:
                 md = pq.read_metadata(fpath)
+                rows[p] += md.num_rows
+                if not stats_cols:
+                    continue
                 schema = md.schema.to_arrow_schema()
                 idx = {}
                 for c in stats_cols:
@@ -887,14 +851,16 @@ def _footer_partition_stats(
                             mn, bool
                         ):
                             return None
+                        if mn != mn or mx != mx:
+                            return None  # a NaN bound hides the real one
                         if lo[c] is None or mn < lo[c]:
                             lo[c] = mn
                         if hi[c] is None or mx > hi[c]:
                             hi[c] = mx
-            out[p] = {c: [lo[c], hi[c]] for c in stats_cols}
+            stats[p] = {c: [lo[c], hi[c]] for c in stats_cols}
     except Exception:
         return None
-    return out
+    return rows, stats
 
 
 #: Bloom-filter geometry FLOOR: bits per per-partition filter / hash
@@ -927,30 +893,6 @@ _BLOOM_M_CAP = 1 << 18
 _BLOOM_BITS_PER_KEY = 10
 
 
-def _choose_bloom_geometry(
-    spark: SparkSession,
-    vdir: str,
-    partition_col: str,
-    bloom_cols: list[str],
-) -> tuple[int, int]:
-    """(m, k) sized for the just-written data: one aggregate scan for
-    the max per-partition distinct count over the bloom columns, then
-    ``m`` = next power of two ≥ 10 bits/key, clamped to
-    [``_BLOOM_M``, ``_BLOOM_M_CAP``]."""
-    df = spark.read.parquet(vdir)
-    row = (
-        df.groupBy(partition_col)
-        .agg(*[F.countDistinct(c).alias(f"_d_{c}") for c in bloom_cols])
-        .agg(*[F.max(f"_d_{c}").alias(c) for c in bloom_cols])
-        .collect()[0]
-    )
-    n_max = max(int(row[c] or 0) for c in bloom_cols)
-    m = _BLOOM_M
-    while m < min(_BLOOM_M_CAP, n_max * _BLOOM_BITS_PER_KEY):
-        m <<= 1
-    return m, _BLOOM_K
-
-
 def _bloom_col_union(old_blooms: dict) -> list[str]:
     """The table's full bloom-column set: the UNION across partition
     entries, not an arbitrary first partition's keys — a partition whose
@@ -974,7 +916,7 @@ def bloom_probe_positions(
     value, m: int = _BLOOM_M, k: int = _BLOOM_K
 ) -> list[int]:
     """The ``k`` bit positions a value hashes to — pure-Python twin of the
-    Spark-side expression in :func:`_partition_blooms` (both sides take
+    Spark-side expression in :func:`_written_metadata` (both sides take
     the first 15 hex chars of ``md5("{value}:{seed}")``, so a manifest
     written by a cluster is probed identically by any reader)."""
     import hashlib
@@ -1007,39 +949,93 @@ def _bloom_position_exprs(col: str, m: int, k: int):
     ]
 
 
-def _partition_blooms(
+def _bloom_hex(positions, m: int) -> str:
+    """The manifest's hex bitmap of a filter whose set bits are
+    ``positions`` folded to ``m`` bits."""
+    buf = bytearray((m + 7) // 8)
+    for p in positions:
+        p %= m
+        buf[p >> 3] |= 1 << (p & 7)
+    return format(int.from_bytes(buf, "little"), "x")
+
+
+def _written_metadata(
     spark: SparkSession,
     vdir: str,
     partition_col: str,
-    bloom_cols: list[str],
-    m: int = _BLOOM_M,
-    k: int = _BLOOM_K,
-) -> dict[str, dict[str, str]]:
-    """Per-partition bloom bitmaps ``{pval: {col: hex}}`` over a freshly
-    written version directory — the equality-predicate complement of
-    :func:`_partition_stats`' range zone maps (Delta/Iceberg bloom-index
-    metadata reduced to partition granularity).  One aggregate scan per
-    column; driver-side state is bounded by partitions × ``m`` bits.
-    NULLs are not represented (an equality probe is never NULL)."""
-    df = spark.read.parquet(vdir)
-    out: dict[str, dict[str, str]] = {}
-    for c in bloom_cols:
-        pos = F.explode(F.array(*_bloom_position_exprs(c, m, k))).alias("_pos")
-        rows = (
-            df.filter(F.col(c).isNotNull())
-            .select(
-                F.col(partition_col).cast("string").alias(partition_col), pos
-            )
-            .groupBy(partition_col)
-            .agg(F.collect_set("_pos").alias("_ps"))
-            .collect()
+    schema: list[list[str]],
+    stats_cols: list[str] = (),
+    bloom_cols: list[str] = (),
+    geometry: tuple[int, int] | None = None,
+) -> tuple[dict, dict, dict, tuple[int, int] | None]:
+    """``(rows, stats, blooms, geometry)`` of a freshly written directory
+    in ONE pass: per-partition row counts ``{pval: n}``, zone maps
+    ``{pval: {col: [min, max]}}`` for ``stats_cols`` (the range-skipping
+    half of a table format's metadata) and bloom bitmaps
+    ``{pval: {col: hex}}`` for ``bloom_cols`` (its equality-probe half).
+    Keys are the Spark string rendering of each partition value — the
+    encoding every manifest key and read-side comparison uses.
+
+    ``schema`` is the written DataFrame's :func:`_schema_record`, so the
+    scan runs no schema-inference job.  With no bloom columns the parquet
+    footers answer whenever they provably can (:func:`_footer_metadata`)
+    and no Spark job runs at all; otherwise one aggregate computes
+    everything.  Blooms are mergeable sketches: each seed's positions
+    collect per partition and OR together on the driver.  NULLs are not
+    represented (an equality probe is never NULL), so a column that is
+    all-NULL in a partition has no entry there.
+
+    ``geometry``: the table's recorded ``(m, k)``, which new bitmaps must
+    share to OR-merge with kept ones.  ``None`` chooses it from this data
+    — ``m`` = the next power of two ≥ 10 bits per key of the largest
+    per-partition distinct count, clamped to [``_BLOOM_M``,
+    ``_BLOOM_M_CAP``] — from the same pass: positions collect modulo the
+    cap beside the distinct counts and fold to the chosen ``m`` on the
+    driver (every ``m`` is a power of two dividing the cap)."""
+    if not bloom_cols:
+        footer = _footer_metadata(vdir, partition_col, stats_cols)
+        if footer is not None:
+            return (*footer, {}, geometry)
+    fold, k = geometry or (_BLOOM_M_CAP, _BLOOM_K)
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    for i, c in enumerate(stats_cols):
+        aggs += [F.min(c).alias(f"_lo{i}"), F.max(c).alias(f"_hi{i}")]
+    for i, c in enumerate(bloom_cols):
+        aggs += [
+            F.collect_set(F.when(F.col(c).isNotNull(), pos)).alias(f"_b{i}_{s}")
+            for s, pos in enumerate(_bloom_position_exprs(c, fold, k))
+        ]
+        if geometry is None:
+            aggs.append(F.countDistinct(c).alias(f"_d{i}"))
+    data = [col for col in schema if col[0] != partition_col]
+    got = (
+        _read_pinned(spark, vdir, data)
+        .groupBy(F.col(partition_col).cast("string").alias("_p"))
+        .agg(*aggs)
+        .collect()
+    )
+    if geometry is None and bloom_cols:
+        n_max = max(
+            (r[f"_d{i}"] for r in got for i in range(len(bloom_cols))),
+            default=0,
         )
-        for r in rows:
-            bits = 0
-            for p in r["_ps"]:
-                bits |= 1 << int(p)
-            out.setdefault(str(r[partition_col]), {})[c] = f"{bits:x}"
-    return out
+        m = _BLOOM_M
+        while m < min(_BLOOM_M_CAP, n_max * _BLOOM_BITS_PER_KEY):
+            m <<= 1
+        geometry = (m, k)
+    rows, stats, blooms = {}, {}, {}
+    for r in got:
+        p = r["_p"]
+        rows[p] = r["_n"]
+        if stats_cols:
+            stats[p] = {
+                c: [r[f"_lo{i}"], r[f"_hi{i}"]] for i, c in enumerate(stats_cols)
+            }
+        for i, c in enumerate(bloom_cols):
+            pos = set().union(*(r[f"_b{i}_{s}"] for s in range(k)))
+            if pos:
+                blooms.setdefault(p, {})[c] = _bloom_hex(pos, geometry[0])
+    return rows, stats, blooms, geometry
 
 
 def _bloom_may_contain(hex_bits: str, value, m: int = _BLOOM_M, k: int = _BLOOM_K) -> bool:
@@ -1154,32 +1150,25 @@ def init_table(
     vdir = version_dir(root, v)
     df.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
     spark.catalog.refreshByPath(vdir)
-    counts = _written_partition_counts(spark, vdir, partition_col)
+    schema = _schema_record(df)
+    counts, stats, blooms, geometry = _written_metadata(
+        spark, vdir, partition_col, schema, stats_cols or [], bloom_cols or []
+    )
     _require_non_null_partitions(counts)
-    parts = [str(p) for p in counts]
     manifest = {
         "version": v,
-        "partitions": {p: v for p in sorted(parts)},
+        "partitions": {p: v for p in sorted(counts)},
         "operation": "create",
-        "schema": _schema_record(df),
-        "rows": {str(p): n for p, n in counts.items()},
+        "schema": schema,
+        "rows": counts,
     }
     if constraints:
         manifest["constraints"] = dict(constraints)
     if stats_cols:
-        manifest["stats"] = _partition_stats(
-            spark, vdir, partition_col, stats_cols
-        )
+        manifest["stats"] = stats
     if bloom_cols:
-        # one extra aggregate pass over the just-written (page-cached)
-        # version dir — create-only, metadata-scale output; folding it
-        # into _partition_blooms' per-column scan would couple the two
-        # for a marginal win (code-review r14, accepted cost)
-        bm, bk = _choose_bloom_geometry(spark, vdir, partition_col, bloom_cols)
-        manifest["bloom"] = _partition_blooms(
-            spark, vdir, partition_col, bloom_cols, m=bm, k=bk
-        )
-        manifest["bloom_geometry"] = {"m": bm, "k": bk}
+        manifest["bloom"] = blooms
+        manifest["bloom_geometry"] = {"m": geometry[0], "k": geometry[1]}
     _commit_manifest(root, manifest)
 
 
@@ -1294,37 +1283,46 @@ def read_snapshot(
     def _tag_wv(df: DataFrame, wv: int) -> DataFrame:
         return df.withColumn("_wv", F.lit(wv)) if seq_aware else df
 
+    written: dict[int, dict[str, str]] = {}
+
+    def _piece_columns(v: int, names=None) -> list | None:
+        # ``names`` (default: every data column — partition values live
+        # in the directory names) typed as _MANIFEST.v{v}.json records
+        # them: the schema of the files the commit that claimed _v{v}
+        # wrote.  A history file vacuum removed, a piece under a shallow
+        # clone's fallback root (its history lives with the source) or an
+        # unrecorded name leaves the piece to schema inference
+        if v not in written:
+            rec = []
+            if os.path.isdir(version_dir(root, v)):
+                try:
+                    rec = read_manifest(root, v).get("schema") or []
+                except (FileNotFoundError, ValueError):
+                    pass
+            written[v] = dict(rec)
+        types = written[v]
+        names = names or [n for n in types if n != partition_col]
+        if all(n in types for n in names):
+            return [[n, types[n]] for n in names]
+        return None
+
     pieces = []
-    for v, pvals in sorted(by_version.items()):
-        vdir = _resolve_vdir(root, manifest, v)
-        spark.catalog.refreshByPath(vdir)
-        pieces.append(
-            _tag_wv(
-                _normalize_types(
-                    _map_physical(
-                        spark.read.parquet(vdir), manifest, v
-                    ).filter(
-                        F.col(partition_col).cast("string").isin(pvals)
-                    )
-                ),
-                v,
+    for sub, by in (((), by_version), (("_append",), app_by_version)):
+        for v, pvals in sorted(by.items()):
+            path = os.path.join(_resolve_vdir(root, manifest, v), *sub)
+            spark.catalog.refreshByPath(path)
+            df = _read_pinned(spark, path, _piece_columns(v))
+            pieces.append(
+                _tag_wv(
+                    _normalize_types(
+                        _map_physical(df, manifest, v).filter(
+                            F.col(partition_col).cast("string").isin(sorted(pvals))
+                        )
+                    ),
+                    v,
+                )
             )
-        )
-    for av, pvals in sorted(app_by_version.items()):
-        adir = os.path.join(_resolve_vdir(root, manifest, av), "_append")
-        spark.catalog.refreshByPath(adir)
-        pieces.append(
-            _tag_wv(
-                _normalize_types(
-                    _map_physical(
-                        spark.read.parquet(adir), manifest, av
-                    ).filter(
-                        F.col(partition_col).cast("string").isin(sorted(pvals))
-                    )
-                ),
-                av,
-            )
-        )
+
     def _project_schema(df: DataFrame) -> DataFrame:
         # the recorded schema pins names, order and types — including on
         # the all-partitions-skipped branch, whose backing directory may
@@ -1359,8 +1357,10 @@ def read_snapshot(
             # every partition skipped by metadata: empty relation whose
             # schema matches a non-empty read exactly
             any_v = min(int(v) for v in manifest["partitions"].values())
-            empty = spark.read.parquet(
-                _resolve_vdir(root, manifest, any_v)
+            empty = _read_pinned(
+                spark,
+                _resolve_vdir(root, manifest, any_v),
+                _piece_columns(any_v),
             ).limit(0)
             return _row_filters(_project_schema(empty))
         if schema_rec:
@@ -1368,13 +1368,7 @@ def read_snapshot(
             # it reads zero rows under the recorded schema and accepts
             # later writes — without this, one full DELETE would brick the
             # table forever (every writer starts with a snapshot read)
-            empty = spark.createDataFrame(
-                [],
-                ", ".join(
-                    "`{}` {}".format(n.replace("`", "``"), t)
-                    for n, t in schema_rec
-                ),
-            )
+            empty = spark.createDataFrame([], _ddl(schema_rec))
             return _row_filters(empty)
         raise ValueError(f"versioned table at {root!r} has no live partitions")
     out = pieces[0]
@@ -1399,9 +1393,12 @@ def read_snapshot(
         for pval, vs in dv["files"].items():
             for dvv in vs:
                 live_by_version.setdefault(int(dvv), []).append(pval)
+        vec_cols = [partition_col, *dv["key_cols"]]
         vecs = [
-            spark.read.parquet(
-                os.path.join(_resolve_vdir(root, manifest, dvv), "_dv")
+            _read_pinned(
+                spark,
+                os.path.join(_resolve_vdir(root, manifest, dvv), "_dv"),
+                _piece_columns(dvv, vec_cols),
             ).filter(
                 F.col(partition_col).cast("string").isin(sorted(pvals))
             )
@@ -2026,24 +2023,23 @@ def _update_merge_on_read(
             if p in rows:
                 rows[p] = int(rows[p]) + n
         new_manifest["rows"] = rows
-    old_stats = manifest.get("stats")
+    old_stats = manifest.get("stats") or {}
+    old_blooms = manifest.get("bloom") or {}
+    if old_stats or old_blooms:
+        # the appended rows' filters OR into the existing bitmaps, so they
+        # MUST be built at the table's recorded geometry
+        _n, add, addb, _g = _written_metadata(
+            spark, adir, partition_col, _schema_record(replacement),
+            sorted(next(iter(old_stats.values()), {})),
+            _bloom_col_union(old_blooms),
+            _manifest_bloom_geometry(manifest),
+        )
     if old_stats:
-        stats_cols = sorted(next(iter(old_stats.values())).keys())
-        add = _partition_stats(spark, adir, partition_col, stats_cols)
         new_manifest["stats"] = {
             p: _widen_partition_stats(st, add[p]) if p in add else st
             for p, st in old_stats.items()
         }
-    old_blooms = manifest.get("bloom")
     if old_blooms:
-        # the appended rows' filter ORs into the existing bitmaps, so it
-        # MUST be built at the table's recorded geometry
-        g_m, g_k = _manifest_bloom_geometry(manifest)
-        addb = _partition_blooms(
-            spark, adir, partition_col,
-            _bloom_col_union(old_blooms),
-            m=g_m, k=g_k,
-        )
         # a column whose appended rows are all NULL has no entry in the
         # append bloom — NULL never matches an equality probe, so the
         # existing filter stands unchanged (indexing addb[p][c] directly
@@ -2291,39 +2287,33 @@ def compact_versioned(
         .parquet(vdir)
     )
     spark.catalog.refreshByPath(vdir)
-    counts = {
-        str(p): n
-        for p, n in _written_partition_counts(spark, vdir, partition_col).items()
-    }
-    parts = sorted(counts)
+    old_stats = manifest.get("stats")
+    old_blooms = manifest.get("bloom")
+    schema = _schema_record(snap)
+    # compaction rewrites the WHOLE snapshot with no old bitmaps to
+    # OR-merge against — the one point where re-sizing is free — so the
+    # bloom geometry is RE-CHOSEN (geometry None) instead of pinning the
+    # init-time choice: a table that grew past its initial key density
+    # escapes bloom saturation here (code-review r14)
+    counts, stats, blooms, geometry = _written_metadata(
+        spark, vdir, partition_col, schema,
+        sorted(next(iter(old_stats.values()))) if old_stats else [],
+        _bloom_col_union(old_blooms) if old_blooms else [],
+    )
     new_manifest = {
         "version": v,
-        "partitions": {p: v for p in parts},
+        "partitions": {p: v for p in sorted(counts)},
         "operation": "optimize",
-        "schema": _schema_record(snap),
+        "schema": schema,
         "rows": counts,
     }
     if "constraints" in manifest:
         new_manifest["constraints"] = manifest["constraints"]
-    old_stats = manifest.get("stats")
     if old_stats:
-        stats_cols = sorted(next(iter(old_stats.values())).keys())
-        new_manifest["stats"] = _partition_stats(
-            spark, vdir, partition_col, stats_cols
-        )
-    old_blooms = manifest.get("bloom")
+        new_manifest["stats"] = stats
     if old_blooms:
-        # compaction rewrites the WHOLE snapshot with no old bitmaps to
-        # OR-merge against — the one point where re-sizing is free — so
-        # RE-CHOOSE the geometry instead of pinning the init-time choice:
-        # a table that grew past its initial key density escapes bloom
-        # saturation here (code-review r14)
-        bloom_cols = _bloom_col_union(old_blooms)
-        g_m, g_k = _choose_bloom_geometry(spark, vdir, partition_col, bloom_cols)
-        new_manifest["bloom"] = _partition_blooms(
-            spark, vdir, partition_col, bloom_cols, m=g_m, k=g_k
-        )
-        new_manifest["bloom_geometry"] = {"m": g_m, "k": g_k}
+        new_manifest["bloom"] = blooms
+        new_manifest["bloom_geometry"] = {"m": geometry[0], "k": geometry[1]}
     _commit_checked(root, new_manifest, manifest["version"])
     return v
 
@@ -2597,66 +2587,57 @@ def _rewrite_partitions(
         for _d, _dn, fs in os.walk(vdir)
         for f in fs
     )
-    if has_files:
-        written_counts = {
-            str(p): n
-            for p, n in _written_partition_counts(
-                spark, vdir, partition_col
-            ).items()
-        }
-    else:
-        written_counts = {}  # every affected partition fully emptied
-    written_vals = set(written_counts)
+    old_stats = manifest.get("stats")
+    old_blooms = manifest.get("bloom")
+    schema = _schema_record(content)
+    written_counts, new_stats, new_blooms = {}, {}, {}
+    if has_files:  # else every affected partition was fully emptied
+        # rebuilt filters keep the recorded geometry (the same-geometry
+        # rule as optimize): they must merge cleanly with the kept ones
+        written_counts, new_stats, new_blooms, _g = _written_metadata(
+            spark, vdir, partition_col, schema,
+            sorted(next(iter(old_stats.values()))) if old_stats else [],
+            _bloom_col_union(old_blooms) if old_blooms else [],
+            _manifest_bloom_geometry(manifest),
+        )
+    # the manifest entries this rewrite replaces.  A manifest written
+    # before keys took Spark's cast('string') rendering holds a boolean
+    # partition as Python's 'True', not 'true'; left out, that entry
+    # would stay live next to the new key
+    replaced = set(affected_vals)
+    if dict(base.dtypes)[partition_col] == "boolean":
+        replaced |= {x.capitalize() for x in affected_vals}
+    # ownership: untouched partitions keep their version and metadata,
+    # rewritten/new take the fresh version dir's, emptied drop
     parts = {
-        p: ver
-        for p, ver in manifest["partitions"].items()
-        if p not in affected_vals  # untouched partitions keep their version
+        p: ver for p, ver in manifest["partitions"].items() if p not in replaced
     }
-    parts.update({p: v for p in written_vals})  # rewritten + new partitions
-    rows = {
-        p: n
-        for p, n in manifest.get("rows", {}).items()
-        if p not in affected_vals
-    }
+    parts.update({p: v for p in written_counts})
+    rows = {p: n for p, n in manifest.get("rows", {}).items() if p not in replaced}
     rows.update(written_counts)
     new_manifest = {
         "version": v,
         "partitions": parts,
         "operation": operation,
-        "schema": _schema_record(content),
+        "schema": schema,
         "rows": {p: rows[p] for p in parts if p in rows},
     }
     if "constraints" in manifest:
         new_manifest["constraints"] = manifest["constraints"]
-    old_stats = manifest.get("stats")
     if old_stats:
-        # zone maps follow the ownership rules: untouched keep theirs,
-        # rewritten/new recompute from the fresh version dir, emptied drop
-        stats_cols = sorted(next(iter(old_stats.values())).keys())
-        kept = {p: st for p, st in old_stats.items() if p not in affected_vals}
-        if written_vals:
-            kept.update(_partition_stats(spark, vdir, partition_col, stats_cols))
+        kept = {p: st for p, st in old_stats.items() if p not in replaced}
+        kept.update(new_stats)
         new_manifest["stats"] = {p: kept[p] for p in parts if p in kept}
-    old_blooms = manifest.get("bloom")
     if old_blooms:
-        # same-geometry rule as optimize: rebuilt filters must merge
-        # cleanly with the kept ones
-        g_m, g_k = _manifest_bloom_geometry(manifest)
-        bloom_cols = _bloom_col_union(old_blooms)
-        keptb = {p: bm for p, bm in old_blooms.items() if p not in affected_vals}
-        if written_vals:
-            keptb.update(
-                _partition_blooms(
-                    spark, vdir, partition_col, bloom_cols, m=g_m, k=g_k
-                )
-            )
+        keptb = {p: bm for p, bm in old_blooms.items() if p not in replaced}
+        keptb.update(new_blooms)
         new_manifest["bloom"] = {p: keptb[p] for p in parts if p in keptb}
         if manifest.get("bloom_geometry"):
             new_manifest["bloom_geometry"] = dict(manifest["bloom_geometry"])
-    carried_dv = _carry_dv(manifest, affected_vals)
+    carried_dv = _carry_dv(manifest, replaced)
     if carried_dv:
         new_manifest["dv"] = carried_dv
-    carried_ap = _carry_appends(manifest, affected_vals)
+    carried_ap = _carry_appends(manifest, replaced)
     if carried_ap:
         new_manifest["appends"] = carried_ap
     if manifest.get("fallback_roots"):

@@ -10,6 +10,11 @@ the same logical plans scale to a real multi-executor cluster:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and are
   deployment-independent.
 - Arrow enabled: every pandas_udf / mapInPandas boundary is Arrow-batched.
+- Partition-directory listing on the driver up to 4096 directories per
+  level (``configure_session``): a versioned-table read lists each live
+  version's partition directories, and above Spark's default of 32 that
+  listing is a Spark job — on ``local[N]`` it runs on the same cores as
+  the driver and only adds scheduling cost.
 """
 
 from __future__ import annotations
@@ -70,6 +75,11 @@ def configure_session(spark: SparkSession) -> SparkSession:
     # flipped per-table inside loaders).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # List up to 4096 partition directories on the driver instead of in a
+    # Spark job (default threshold 32): on local[N] the listing job runs on
+    # the driver's own cores, so an 80-partition version directory paid an
+    # 80-task job per read for nothing but scheduling
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     # Python DataSource pushFilters (sources/datalake.py) requires opt-in
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

@@ -2158,3 +2158,306 @@ def test_optimize_drops_fully_vector_deleted_partition(spark, tmp_path):
     assert "dv" not in m
     assert snapshot_rowcount(root) == 8
     assert read_snapshot(spark, root, "p").count() == 8
+
+
+# -- planning and post-write metadata without metadata jobs ------------------
+
+
+class _JobCount:
+    """Spark jobs this thread launches inside the block, counted through a
+    job group (a thread-local property, so the calling thread's jobs)."""
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.jobs = None
+
+    def __enter__(self):
+        import uuid
+
+        self.gid = f"t-{uuid.uuid4().hex}"
+        self.sc.setJobGroup(self.gid, self.gid)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.sc.setLocalProperty("spark.job.description", None)
+        self.jobs = len(self.sc.statusTracker().getJobIdsForGroup(self.gid))
+
+
+@pytest.fixture(scope="module")
+def wide_table(spark, tmp_path_factory):
+    """48 string partitions with zone maps and a bloom column; versions
+    2 and 3 each rewrite one partition, 4 adds a MoR vector on p05 and 5
+    a MoR append on p07 — five live versions in all."""
+    from datalake2anomali_spark.io.publish import (
+        delete_from_versioned,
+        update_versioned,
+    )
+
+    root = str(tmp_path_factory.mktemp("wide") / "t")
+    df = spark.range(0, 480, 1, 4).select(
+        "id",
+        (F.col("id") * 3).alias("v"),
+        F.format_string("p%02d", F.col("id") % 48).alias("p"),
+    )
+    init_table(spark, df, root, "p", stats_cols=["v"], bloom_cols=["id"])
+    for pid in (1, 2):
+        src = spark.createDataFrame(
+            [(pid, 1000 + pid, f"p{pid:02d}")], "id long, v long, p string"
+        )
+        merge_into_versioned(spark, root, src, ["id"], "p")
+    delete_from_versioned(
+        spark, root, "p", F.col("id") == 5,
+        mode="merge_on_read", key_cols=["id"],
+    )
+    update_versioned(
+        spark, root, "p", F.col("id") == 7, {"v": F.lit(-7)},
+        mode="merge_on_read", key_cols=["id"],
+    )
+    model = {i: (i * 3, f"p{i % 48:02d}") for i in range(480) if i != 5}
+    model.update({1: (1001, "p01"), 2: (1002, "p02"), 7: (-7, "p07")})
+    return root, model
+
+
+def _id_v_p(df):
+    return sorted((r["id"], r["v"], r["p"]) for r in df.collect())
+
+
+def test_read_snapshot_plans_without_spark_jobs(spark, wide_table):
+    """Building a snapshot read launches no Spark job: the partition
+    directories list on the driver and every piece reads under the
+    schema its commit recorded, so no listing or footer-inference job
+    runs before the first data job."""
+    root, model = wide_table
+    m = read_manifest(root)
+    assert len(m["partitions"]) >= 40
+    assert len(set(m["partitions"].values())) >= 3
+    assert m["dv"]["files"] and m["appends"]
+    with _JobCount(spark) as jc:
+        full = read_snapshot(spark, root, "p")
+        point = read_snapshot(spark, root, "p", eq_predicate=("id", 7))
+        zone = read_snapshot(spark, root, "p", predicate=("v", 0, 30))
+        asof = read_snapshot(spark, root, "p", version=2)
+    assert jc.jobs == 0
+    want = sorted((i, v, p) for i, (v, p) in model.items())
+    assert _id_v_p(full) == want
+    assert _id_v_p(point) == [(7, -7, "p07")]
+    assert _id_v_p(zone) == [r for r in want if 0 <= r[1] <= 30]
+    assert len(asof.collect()) == 480
+
+
+def test_narrow_merge_runs_one_post_write_aggregate(
+    spark, wide_table, tmp_path, monkeypatch
+):
+    """A one-partition MERGE into a table with zone maps and blooms
+    computes rows, min/max and bloom bitmaps in one aggregate: its
+    shuffle stage and result stage are the only jobs after the write."""
+    import shutil
+
+    from datalake2anomali_spark.io import publish
+
+    root = str(tmp_path / "t")
+    shutil.copytree(wide_table[0], root)
+    real = publish._written_metadata
+    calls = []
+
+    def counted(*args, **kwargs):
+        with _JobCount(spark) as jc:
+            out = real(*args, **kwargs)
+        calls.append(jc.jobs)
+        return out
+
+    monkeypatch.setattr(publish, "_written_metadata", counted)
+    src = spark.createDataFrame([(9, 99, "p09")], "id long, v long, p string")
+    v = merge_into_versioned(spark, root, src, ["id"], "p")
+    assert len(calls) == 1 and 1 <= calls[0] <= 2, calls
+    m = read_manifest(root)
+    assert m["partitions"]["p09"] == v and m["rows"]["p09"] == 10
+    assert m["stats"]["p09"]["v"] == [99, 1323]
+
+
+def _model_bloom_hex(values, m, k):
+    from datalake2anomali_spark.io.publish import bloom_probe_positions
+
+    bits = 0
+    for x in values:
+        for pos in bloom_probe_positions(x, m, k):
+            bits |= 1 << pos
+    return format(bits, "x")
+
+
+def _model_range(values):
+    import math
+
+    vals = [x for x in values if x is not None]
+    if not vals:
+        return [None, None]
+    nums = [x for x in vals if not (isinstance(x, float) and math.isnan(x))]
+    # Spark orders NaN above every other double
+    hi = float("nan") if len(nums) < len(vals) else max(nums)
+    return [min(nums) if nums else float("nan"), hi]
+
+
+def _same(a, b):
+    import math
+
+    if isinstance(a, float) and isinstance(b, float) and math.isnan(a):
+        return math.isnan(b)
+    return a == b
+
+
+def test_one_pass_metadata_matches_pandas_model(spark, tmp_path):
+    """Rows, zone maps and bloom bitmaps of the one-pass aggregate equal
+    a pandas model built with ``bloom_probe_positions``: a partition whose
+    bloom column is all NULL has no entry for it, an all-NULL stats column
+    ranges [None, None], a NaN double tops the max, and a merge-on-read
+    append widens the ranges and ORs its bits in.  The footer fast path
+    (no bloom columns) gives the same rows and zone maps."""
+    import pandas as pd
+
+    from datalake2anomali_spark.io.publish import update_versioned
+
+    nan = float("nan")
+    rows = [
+        (
+            i,
+            None if i % 3 == 1 else i % 7,  # all NULL in p='b'
+            nan if i == 20 else i / 4,  # one NaN in p='c'
+            None if i % 3 == 0 else i,  # all NULL in p='a'
+            "abc"[i % 3],
+        )
+        for i in range(30)
+    ]
+    cols = ["id", "tag", "x", "n", "p"]
+    df = spark.createDataFrame(rows, "id long, tag long, x double, n long, p string")
+    root = str(tmp_path / "t")
+    init_table(
+        spark, df, root, "p", stats_cols=["x", "n"], bloom_cols=["id", "tag"]
+    )
+    m = read_manifest(root)
+    geo = (m["bloom_geometry"]["m"], m["bloom_geometry"]["k"])
+    assert geo == (1024, 3)
+
+    def check(manifest, model):
+        assert manifest["rows"] == model.groupby("p").size().to_dict()
+        for p, g in model.groupby("p"):
+            for c in ("x", "n"):
+                got = manifest["stats"][p][c]
+                want = _model_range(list(g[c]))
+                assert all(map(_same, got, want)), (p, c, got, want)
+            want_b = {
+                c: _model_bloom_hex([x for x in g[c] if x is not None], *geo)
+                for c in ("id", "tag")
+                if any(x is not None for x in g[c])
+            }
+            assert manifest.get("bloom", {p: want_b})[p] == want_b, p
+
+    model = pd.DataFrame(rows, columns=cols, dtype=object)
+    check(m, model)
+    # without bloom columns the parquet footers answer; they must agree,
+    # the NaN chunk included (its recorded NaN max hides the real 7.25)
+    init_table(spark, df, str(tmp_path / "footer"), "p", stats_cols=["x", "n"])
+    check(read_manifest(str(tmp_path / "footer")), model)
+    assert "tag" not in m["bloom"]["b"]
+    assert m["stats"]["a"]["n"] == [None, None]
+    assert m["stats"]["c"]["x"][1] != m["stats"]["c"]["x"][1]  # NaN
+
+    # MoR UPDATE of id 3 (p='a'): the append's x widens a's range and its
+    # tag's bits OR into a's filter
+    update_versioned(
+        spark, root, "p", F.col("id") == 3, {"x": F.lit(99.5), "tag": F.lit(123)},
+        mode="merge_on_read", key_cols=["id"],
+    )
+    m2 = read_manifest(root)
+    assert m2["stats"]["a"]["x"] == [0.0, 99.5]
+    assert m2["stats"]["a"]["n"] == [None, None]
+    a_tags = [t for i, t, _x, _n, p in rows if p == "a"] + [123]
+    assert m2["bloom"]["a"]["tag"] == _model_bloom_hex(a_tags, *geo)
+    assert m2["bloom"]["a"]["id"] == m["bloom"]["a"]["id"]
+    assert {p: m2[k][p] for k in ("stats", "bloom") for p in "bc"} == {
+        p: m[k][p] for k in ("stats", "bloom") for p in "bc"
+    }
+
+
+def test_vacuumed_history_piece_reads_through_inference(spark, wide_table, tmp_path):
+    """A live piece whose history file vacuum removed reads identical
+    rows through schema inference."""
+    import shutil
+
+    root = str(tmp_path / "t")
+    shutil.copytree(wide_table[0], root)
+    before = _id_v_p(read_snapshot(spark, root, "p"))
+    vacuum(root, retain_last=1)
+    live = {int(v) for v in read_manifest(root)["partitions"].values()}
+    gone = [v for v in live if not os.path.exists(
+        os.path.join(root, f"_MANIFEST.v{v}.json")
+    )]
+    assert gone  # the v1 and v2 pieces lost their history files
+    assert _id_v_p(read_snapshot(spark, root, "p")) == before
+
+
+def test_unparsable_history_schema_reads_through_inference(
+    spark, wide_table, tmp_path
+):
+    """A piece whose recorded schema does not parse as DDL reads identical
+    rows through schema inference."""
+    import json
+    import shutil
+
+    root = str(tmp_path / "t")
+    shutil.copytree(wide_table[0], root)
+    before = _id_v_p(read_snapshot(spark, root, "p"))
+    hist = os.path.join(root, "_MANIFEST.v1.json")
+    with open(hist, encoding="utf-8") as fh:
+        rec = json.load(fh)
+    rec["schema"] = [[n, "no such type!"] for n, _t in rec["schema"]]
+    with open(hist, "w", encoding="utf-8") as fh:
+        json.dump(rec, fh)
+    assert _id_v_p(read_snapshot(spark, root, "p")) == before
+
+
+def test_shallow_clone_fallback_piece_reads_identical_rows(
+    spark, wide_table, tmp_path
+):
+    """A shallow clone's pieces under its fallback root read through
+    schema inference; the clone reads what its source reads, before and
+    after a local commit of its own."""
+    from datalake2anomali_spark.io.publish import clone_table
+
+    src, model = wide_table
+    dst = str(tmp_path / "clone")
+    clone_table(src, dst)
+    want = _id_v_p(read_snapshot(spark, src, "p"))
+    assert _id_v_p(read_snapshot(spark, dst, "p")) == want
+    one = spark.createDataFrame([(11, 5, "p11")], "id long, v long, p string")
+    merge_into_versioned(spark, dst, one, ["id"], "p")
+    want = sorted(r if r[0] != 11 else (11, 5, "p11") for r in want)
+    assert _id_v_p(read_snapshot(spark, dst, "p")) == want
+
+
+def test_rewrite_replaces_legacy_manifest_keys(spark, tmp_path):
+    """A manifest written before partition keys took Spark's rendering
+    keys a boolean partition ``'True'`` where the hive directory and
+    every later commit say ``'true'``.  A rewrite of that partition
+    replaces the legacy entry — partition, rows and zone map — instead of
+    keeping the old key next to the new one."""
+    import json
+
+    from datalake2anomali_spark.io.publish import MANIFEST
+
+    root = str(tmp_path / "t")
+    df = spark.range(0, 8).select("id", (F.col("id") % 2 == 0).alias("flag"))
+    init_table(spark, df, root, "flag", stats_cols=["id"])
+    m = read_manifest(root)
+    assert set(m["partitions"]) == {"true", "false"}
+    legacy = {"true": "True", "false": "False"}
+    for key in ("partitions", "rows", "stats"):
+        m[key] = {legacy[p]: x for p, x in m[key].items()}
+    with open(os.path.join(root, MANIFEST), "w", encoding="utf-8") as fh:
+        json.dump(m, fh)
+
+    src = spark.createDataFrame([(100, True)], "id long, flag boolean")
+    v = merge_into_versioned(spark, root, src, ["id"], "flag")
+    m2 = read_manifest(root)
+    assert m2["partitions"] == {"true": v, "False": 1}
+    assert set(m2["rows"]) == set(m2["stats"]) == {"true", "False"}
