@@ -100,6 +100,31 @@ def read_manifest(
         raise
 
 
+def _canonical_keys(manifest: dict, partition_col: str) -> dict:
+    """``manifest`` keyed in Spark's ``cast('string')`` rendering, which
+    every read filter and ownership test compares.  Manifests written
+    before keys took it hold a boolean partition as ``'True'``/``'False'``:
+    read as is, its rows read as absent and a rewrite keeps the old key
+    next to the new one.  Where both renderings are keyed, ``'true'`` wins."""
+    if dict(manifest.get("schema") or []).get(partition_col) != "boolean":
+        return manifest
+
+    def canon(d: dict) -> dict:
+        old = {p.lower(): x for p, x in d.items() if p in ("True", "False")}
+        return {**old, **{p: x for p, x in d.items() if p not in ("True", "False")}}
+
+    out = dict(manifest)
+    for key in ("partitions", "rows", "stats", "bloom", "appends"):
+        if key in out:
+            out[key] = canon(out[key])
+    if out.get("dv"):
+        out["dv"] = {
+            k: canon(x) if k in ("files", "deleted") else x
+            for k, x in out["dv"].items()
+        }
+    return out
+
+
 #: Branch / tag name charset: must stay a safe filename component.
 _REF_NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 _BRANCH_FILE = re.compile(r"^_BRANCH\.(.+)\.json$")
@@ -1211,7 +1236,7 @@ def read_snapshot(
     ``ref`` reads a branch head instead of main (``version`` wins if
     both are given) — the audit half of write-audit-publish.
     """
-    manifest = read_manifest(root, version, ref=ref)
+    manifest = _canonical_keys(read_manifest(root, version, ref=ref), partition_col)
     stats = manifest.get("stats", {})
     blooms = manifest.get("bloom", {})
     bloom_m, bloom_k = _manifest_bloom_geometry(manifest)
@@ -1471,7 +1496,7 @@ def merge_into_versioned(
     """
     from ..operators.merge import _affected_partitions, _merge_resolved
 
-    manifest = read_manifest(root, ref=ref)
+    manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
     target = read_snapshot(spark, root, partition_col, ref=ref)
     data_cols = list(target.columns)
     missing = set(data_cols) - set(source.columns)
@@ -1536,7 +1561,7 @@ def sync_versioned(
     """
     from ..operators.merge import _merge_resolved
 
-    manifest = read_manifest(root, ref=ref)
+    manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
     target = read_snapshot(spark, root, partition_col, ref=ref)
     data_cols = list(target.columns)
     missing = set(data_cols) - set(source.columns)
@@ -1606,7 +1631,7 @@ def optimize_partitions(
     from ..operators.merge import _hive_partition_dir
     from .compact import dataset_file_stats
 
-    manifest = read_manifest(root)
+    manifest = _canonical_keys(read_manifest(root), partition_col)
     # {directory: raw partition values it holds live files for}.
     # Merge-on-read append-deltas fragment a partition exactly like small
     # files (every read unions them in) — count them, or an update-heavy
@@ -1679,7 +1704,7 @@ def cdc_apply_versioned(
     """
     from ..operators.merge import _affected_partitions, _merge_resolved
 
-    manifest = read_manifest(root)
+    manifest = _canonical_keys(read_manifest(root), partition_col)
     target = read_snapshot(spark, root, partition_col)
     data_cols = list(target.columns)
     ups = changes.filter(F.col(op_col) == "upsert").drop(op_col)
@@ -1813,7 +1838,7 @@ def delete_from_versioned(
     """
     if mode not in ("copy_on_write", "merge_on_read"):
         raise ValueError(f"unknown delete mode {mode!r}")
-    manifest = read_manifest(root, ref=ref)
+    manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
     target = read_snapshot(spark, root, partition_col, ref=ref)
     if mode == "merge_on_read":
         if not key_cols:
@@ -1901,7 +1926,7 @@ def update_versioned(
     """
     if mode not in ("copy_on_write", "merge_on_read"):
         raise ValueError(f"unknown update mode {mode!r}")
-    manifest = read_manifest(root, ref=ref)
+    manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
     target = read_snapshot(spark, root, partition_col, ref=ref)
     data_cols = list(target.columns)
     schema = {f.name: f.dataType for f in target.schema.fields}
@@ -2228,7 +2253,7 @@ def compact_versioned(
             "pass exactly one of order_col or zorder_cols=(a, b)"
         )
 
-    manifest = read_manifest(root)
+    manifest = _canonical_keys(read_manifest(root), partition_col)
     live_bytes = 0
     by_version: dict[int, set[str]] = {}
     for pval, ver in manifest["partitions"].items():
@@ -2542,8 +2567,9 @@ def _rewrite_partitions(
     :func:`delete_from_versioned` and :func:`update_versioned`,
     :func:`optimize_partitions` and ``io.transaction.Transaction.commit``
     — each contributes only its affected-set discovery and its
-    ``resolve``, so the NULL rule, the hit selection, the constraint
-    ordering and the ownership rules cannot drift between them.
+    ``resolve`` (with ``manifest`` passed through :func:`_canonical_keys`
+    as ``base``'s read did), so the NULL rule, the hit selection, the
+    constraint ordering and the ownership rules cannot drift between them.
 
     Order: reject NULL partition values and validate CHECK constraints
     BEFORE claiming a version (ADVICE r7: a rejected write leaves no
@@ -2600,20 +2626,13 @@ def _rewrite_partitions(
             _bloom_col_union(old_blooms) if old_blooms else [],
             _manifest_bloom_geometry(manifest),
         )
-    # the manifest entries this rewrite replaces.  A manifest written
-    # before keys took Spark's cast('string') rendering holds a boolean
-    # partition as Python's 'True', not 'true'; left out, that entry
-    # would stay live next to the new key
-    replaced = set(affected_vals)
-    if dict(base.dtypes)[partition_col] == "boolean":
-        replaced |= {x.capitalize() for x in affected_vals}
     # ownership: untouched partitions keep their version and metadata,
     # rewritten/new take the fresh version dir's, emptied drop
     parts = {
-        p: ver for p, ver in manifest["partitions"].items() if p not in replaced
+        p: ver for p, ver in manifest["partitions"].items() if p not in affected_vals
     }
     parts.update({p: v for p in written_counts})
-    rows = {p: n for p, n in manifest.get("rows", {}).items() if p not in replaced}
+    rows = {p: n for p, n in manifest.get("rows", {}).items() if p not in affected_vals}
     rows.update(written_counts)
     new_manifest = {
         "version": v,
@@ -2625,19 +2644,19 @@ def _rewrite_partitions(
     if "constraints" in manifest:
         new_manifest["constraints"] = manifest["constraints"]
     if old_stats:
-        kept = {p: st for p, st in old_stats.items() if p not in replaced}
+        kept = {p: st for p, st in old_stats.items() if p not in affected_vals}
         kept.update(new_stats)
         new_manifest["stats"] = {p: kept[p] for p in parts if p in kept}
     if old_blooms:
-        keptb = {p: bm for p, bm in old_blooms.items() if p not in replaced}
+        keptb = {p: bm for p, bm in old_blooms.items() if p not in affected_vals}
         keptb.update(new_blooms)
         new_manifest["bloom"] = {p: keptb[p] for p in parts if p in keptb}
         if manifest.get("bloom_geometry"):
             new_manifest["bloom_geometry"] = dict(manifest["bloom_geometry"])
-    carried_dv = _carry_dv(manifest, replaced)
+    carried_dv = _carry_dv(manifest, affected_vals)
     if carried_dv:
         new_manifest["dv"] = carried_dv
-    carried_ap = _carry_appends(manifest, replaced)
+    carried_ap = _carry_appends(manifest, affected_vals)
     if carried_ap:
         new_manifest["appends"] = carried_ap
     if manifest.get("fallback_roots"):
@@ -3396,7 +3415,7 @@ def table_changes(
     """
     from ..operators.quality import snapshot_diff
 
-    to_manifest = read_manifest(root, v_to)
+    to_manifest = _canonical_keys(read_manifest(root, v_to), partition_col)
     # ``partition_col`` is v_to's name; if the partition column was
     # RENAMED inside the span, the v_from snapshot only knows the old
     # name — derive it by replaying the span's rename events backwards
@@ -3416,7 +3435,7 @@ def table_changes(
     # partition / its DV / its appends and so flips manifest state);
     # a content-identical rewrite (compaction) is included and simply
     # diffs to nothing.
-    from_manifest = read_manifest(root, v_from)
+    from_manifest = _canonical_keys(read_manifest(root, v_from), from_pcol)
     churned = _side_touched(to_manifest, from_manifest)
     _pf = lambda p: p in churned  # noqa: E731
     old = read_snapshot(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .publish import (
+    _canonical_keys,
     _check_constraints,
     _hit_partitions,
     _require_non_null_partitions,
@@ -76,7 +77,7 @@ class Transaction:
         self._root = root
         self._pcol = partition_col
         self._ref = ref
-        self._manifest = read_manifest(root, ref=ref)
+        self._manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
         self._df = read_snapshot(spark, root, partition_col, ref=ref)
         self._schema = {f.name: f.dataType for f in self._df.schema.fields}
         self._data_cols = list(self._df.columns)

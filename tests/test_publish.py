@@ -2435,29 +2435,45 @@ def test_shallow_clone_fallback_piece_reads_identical_rows(
     assert _id_v_p(read_snapshot(spark, dst, "p")) == want
 
 
-def test_rewrite_replaces_legacy_manifest_keys(spark, tmp_path):
+def test_legacy_manifest_keys_read_and_rewrite_canonically(spark, tmp_path):
     """A manifest written before partition keys took Spark's rendering
     keys a boolean partition ``'True'`` where the hive directory and
-    every later commit say ``'true'``.  A rewrite of that partition
+    every later commit say ``'true'``.  Its rows still read (deletion
+    vector applied), and a rewrite of that partition keeps them and
     replaces the legacy entry — partition, rows and zone map — instead of
     keeping the old key next to the new one."""
     import json
 
-    from datalake2anomali_spark.io.publish import MANIFEST
+    from datalake2anomali_spark.io.publish import MANIFEST, delete_from_versioned
 
     root = str(tmp_path / "t")
     df = spark.range(0, 8).select("id", (F.col("id") % 2 == 0).alias("flag"))
     init_table(spark, df, root, "flag", stats_cols=["id"])
+    delete_from_versioned(
+        spark, root, "flag", F.col("id") == 1, mode="merge_on_read", key_cols=["id"]
+    )
     m = read_manifest(root)
     assert set(m["partitions"]) == {"true", "false"}
     legacy = {"true": "True", "false": "False"}
-    for key in ("partitions", "rows", "stats"):
-        m[key] = {legacy[p]: x for p, x in m[key].items()}
+    for d in (m, m["dv"]):
+        for key in ("partitions", "rows", "stats", "files", "deleted"):
+            if key in d:
+                d[key] = {legacy[p]: x for p, x in d[key].items()}
     with open(os.path.join(root, MANIFEST), "w", encoding="utf-8") as fh:
         json.dump(m, fh)
 
+    def ids(**kw):
+        return sorted(r.id for r in read_snapshot(spark, root, "flag", **kw).collect())
+
+    assert ids() == [0, *range(2, 8)]
+    assert ids(predicate=("id", 1, 5)) == [2, 3, 4, 5]
+
     src = spark.createDataFrame([(100, True)], "id long, flag boolean")
     v = merge_into_versioned(spark, root, src, ["id"], "flag")
+    assert ids() == [0, *range(2, 8), 100]
     m2 = read_manifest(root)
-    assert m2["partitions"] == {"true": v, "False": 1}
-    assert set(m2["rows"]) == set(m2["stats"]) == {"true", "False"}
+    assert m2["partitions"] == {"true": v, "false": 1}
+    assert m2["rows"] == {"true": 5, "false": 4}
+    assert set(m2["stats"]) == {"true", "false"}
+    assert m2["dv"]["files"] == {"false": [2]}
+    assert m2["dv"]["deleted"] == {"false": 1}
