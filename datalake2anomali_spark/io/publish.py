@@ -20,10 +20,10 @@ module is that protocol reduced to its two load-bearing pieces:
   fully published.  (On an object store, the swap is a conditional PUT /
   rename of the same single object — same contract.)
 
-:func:`read_snapshot` reconstructs the table as one pruned scan per live
-version: partitions are hive-encoded inside each version directory, so
-owned-partition selection is an ``isin`` filter that partition-prunes at
-planning time.  The live-version count stays small because every
+:func:`read_snapshot` reconstructs the table as one typed scan of the
+live ``_v{N}/<col>=<value>`` directories the manifest names, the
+partition column typed as recorded rather than inferred from the names.
+The live-version count stays small because every
 :func:`compact_versioned` collapses the table back to a single version.
 
 The manifest optionally carries **zone maps** — per-partition min/max for
@@ -34,9 +34,10 @@ prove empty before any file opens and still applies the row filter, so
 stats are I/O advice, never semantics — the Iceberg/Delta file-skipping
 metadata, reduced to its partition-granularity core.
 
-Partition values are compared as strings (their hive-directory encoding)
-throughout; driver-side state is bounded by the partition count of the
-batch (merge) or table (compact/read), never by rows.
+Partition values are compared as strings (Spark's rendering of the typed
+value, which is the unescaped directory name) throughout; driver-side
+state is bounded by the partition count of the batch (merge) or table
+(compact/read), never by rows.
 
 Reference parity: none — the reference writes through a remote API and
 has no table-storage surface.  Extension operator per the build brief
@@ -53,8 +54,12 @@ import re
 import tempfile
 import time
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..operators.merge import _affected_partitions, _hive_partition_dir, _merge_resolved
 
 MANIFEST = "_MANIFEST.json"
 _VDIR = re.compile(r"^_v(\d+)$")
@@ -538,77 +543,6 @@ def _schema_record(df: DataFrame) -> list[list[str]]:
     return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
 
 
-#: Characters Spark's hive partition-value inference can interpret as a
-#: numeric / date / timestamp rendering.  A raw directory value containing
-#: anything OUTSIDE this set is inferred StringType, whose ``str()`` is the
-#: raw value itself — so the footer fast path may key it verbatim.
-_PARTITION_AMBIGUOUS_CHARS = frozenset("0123456789+-.:eET /")
-
-_CANONICAL_LONG_RE = re.compile(r"-?(0|[1-9][0-9]*)")
-
-
-def _partition_value_renders_verbatim(raw: str) -> bool:
-    """True when Spark's partition-type inference of ``raw`` is guaranteed
-    to stringify back to ``raw`` — the exactness contract that lets the
-    footer fast path key manifests by the directory value directly.
-
-    Cases accepted: canonical longs (no leading zeros / plus sign — Java's
-    ``parseInt`` would re-render those differently), strict ISO dates
-    (``DateType`` stringifies to the same ISO form), and values containing
-    a character no numeric/date/timestamp rendering can contain (inferred
-    StringType verbatim).  Anything ambiguous ("0123", "1.50", "1e3",
-    timestamp-shaped strings) returns False and the caller falls back to
-    the Spark scan whose semantics are the historical contract."""
-    if _CANONICAL_LONG_RE.fullmatch(raw):
-        return -(2**63) <= int(raw) < 2**63
-    if len(raw) == 10:
-        import datetime as _dt
-
-        try:
-            _dt.date.fromisoformat(raw)
-            return True
-        except ValueError:
-            pass
-    return any(ch not in _PARTITION_AMBIGUOUS_CHARS for ch in raw)
-
-
-def _footer_partition_files(
-    vdir: str, partition_col: str
-) -> dict[str, list[str]] | None:
-    """{raw_partition_value: [parquet paths]} for a freshly written
-    single-level hive layout, or None when the layout (or any value's
-    rendering) is not provably equivalent to the Spark-scan contract.
-    Skips underscore/dot-prefixed entries exactly as Spark's file index
-    does (``_SUCCESS``, ``_dv``, ``_append``, checksums)."""
-    from urllib.parse import unquote
-
-    prefix = partition_col + "="
-    out: dict[str, list[str]] = {}
-    try:
-        entries = sorted(os.listdir(vdir))
-    except OSError:
-        return None
-    for d in entries:
-        if d.startswith(("_", ".")):
-            continue
-        pdir = os.path.join(vdir, d)
-        if not os.path.isdir(pdir) or not d.startswith(prefix):
-            return None  # unrecognized layout: let the scan decide
-        raw = unquote(d[len(prefix):])
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            return None  # null partition: historical path raises/renders
-        if not _partition_value_renders_verbatim(raw):
-            return None
-        files = [
-            os.path.join(pdir, f)
-            for f in sorted(os.listdir(pdir))
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        if files:
-            out[raw] = files
-    return out
-
-
 def _ddl(columns) -> str:
     """A ``[[name, DDL type], ...]`` record as a schema DDL string."""
     return ", ".join(
@@ -617,15 +551,13 @@ def _ddl(columns) -> str:
 
 
 def _read_pinned(spark: SparkSession, path: str, columns) -> DataFrame:
-    """``spark.read.parquet(path)`` with the data schema given up front —
+    """``spark.read.parquet(path)`` with the schema given up front —
     ``columns`` as recorded ``[name, DDL type]`` pairs — so planning runs
-    no footer schema-inference job.  Hive partition columns are left out
-    of ``columns`` and still inferred from the directory names, exactly
-    as an unpinned read types them.  No record, or one whose DDL does not
+    no footer schema-inference job.  A hive partition column named in
+    ``columns`` takes its recorded type; one left out is inferred from
+    the directory names.  No record, or one whose DDL does not
     parse, reads through inference."""
     if columns:
-        from pyspark.errors import ParseException
-
         try:
             return spark.read.schema(_ddl(columns)).parquet(path)
         except ParseException:
@@ -826,17 +758,42 @@ def _footer_metadata(
     the largest real value — so it routes to the scan).
 
     Returns None whenever ANY condition needed for results bit-identical
-    to the Spark scan is not provable: no files, unrecognized layout,
-    ambiguous partition rendering (:func:`_partition_value_renders_verbatim`),
-    an unreadable footer, a missing/none statistics object on a chunk
-    holding non-null values, a NaN bound, a non-numeric column type, or a
-    column absent from a file's schema.  All-null chunks legitimately carry no
-    min/max and contribute nothing; a partition whose every chunk is
-    all-null yields [None, None], exactly like the scan's min/max."""
-    by_part = _footer_partition_files(vdir, partition_col)
+    to the Spark scan is not provable: no files, unrecognized layout, a
+    NULL partition, an unreadable footer, a missing/none statistics
+    object on a chunk holding non-null values, a NaN bound, a
+    non-numeric column type, or a column absent from a file's schema.
+    All-null chunks legitimately carry no min/max and contribute nothing;
+    a partition whose every chunk is all-null yields [None, None],
+    exactly like the scan's min/max."""
+    from urllib.parse import unquote
+
+    import pyarrow.parquet as pq
+
+    # {unescaped partition value: [parquet paths]}, skipping underscore /
+    # dot entries exactly as Spark's file index does (``_SUCCESS``, ``_dv``)
+    by_part: dict[str, list[str]] = {}
+    try:
+        entries = sorted(os.listdir(vdir))
+    except OSError:
+        return None
+    for d in entries:
+        pdir = os.path.join(vdir, d)
+        if d.startswith(("_", ".")):
+            continue
+        if not os.path.isdir(pdir) or not d.startswith(partition_col + "="):
+            return None  # unrecognized layout: let the scan decide
+        raw = unquote(d[len(partition_col) + 1 :])
+        if raw == "__HIVE_DEFAULT_PARTITION__":
+            return None  # null partition: historical path raises/renders
+        files = [
+            os.path.join(pdir, f)
+            for f in sorted(os.listdir(pdir))
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+        if files:
+            by_part[raw] = files
     if not by_part:
         return None
-    import pyarrow.parquet as pq
 
     rows: dict[str, int] = {}
     stats: dict[str, dict[str, list]] = {}
@@ -1002,10 +959,10 @@ def _written_metadata(
     encoding every manifest key and read-side comparison uses.
 
     ``schema`` is the written DataFrame's :func:`_schema_record`, so the
-    scan runs no schema-inference job.  With no bloom columns the parquet
-    footers answer whenever they provably can (:func:`_footer_metadata`)
-    and no Spark job runs at all; otherwise one aggregate computes
-    everything.  Blooms are mergeable sketches: each seed's positions
+    scan infers nothing: a key is the unescaped directory value.  With no
+    bloom columns the parquet footers answer whenever they provably can
+    (:func:`_footer_metadata`) and no Spark job runs at all; otherwise one
+    aggregate computes everything.  Blooms are mergeable sketches: each seed's positions
     collect per partition and OR together on the driver.  NULLs are not
     represented (an equality probe is never NULL), so a column that is
     all-NULL in a partition has no entry there.
@@ -1032,9 +989,8 @@ def _written_metadata(
         ]
         if geometry is None:
             aggs.append(F.countDistinct(c).alias(f"_d{i}"))
-    data = [col for col in schema if col[0] != partition_col]
     got = (
-        _read_pinned(spark, vdir, data)
+        _read_pinned(spark, vdir, schema)
         .groupBy(F.col(partition_col).cast("string").alias("_p"))
         .agg(*aggs)
         .collect()
@@ -1207,8 +1163,15 @@ def read_snapshot(
     partition_filter=None,
     ref: str | None = None,
 ) -> DataFrame:
-    """The published table: for each live version, one partition-pruned
-    scan of its directory restricted to the partitions it still owns.
+    """The published table as ONE parquet scan per physical schema (per
+    version too when append-deltas tag rows with ``_wv``): the live
+    ``<version dir>/<col>=<value>`` directories, partition column typed
+    as the manifest records it.  A piece with no usable record (history
+    vacuumed, a fallback root, an empty or unparseable schema) or a
+    rename/add after it reads its directories alone, data columns as the
+    footers infer them or as recorded.  Only a key naming no directory
+    (older code keyed some values under inference) reads its version
+    through partition inference and ``isin``.
 
     ``predicate = (col, lo, hi)`` applies ``col BETWEEN lo AND hi`` AND
     uses the manifest's zone maps to skip partitions whose recorded
@@ -1275,17 +1238,14 @@ def read_snapshot(
     schema_rec = manifest.get("schema")
     ddl_map = dict(schema_rec) if schema_rec else {}
 
-    def _normalize_types(df: DataFrame) -> DataFrame:
-        # pin recorded column TYPES per piece, before any union: hive
-        # partition-type inference re-types the partition column per
-        # version directory (a days() value infers DATE, a truncate()
-        # value INT, a later generation's value STRING — see .hidden),
-        # and a cross-version union would coerce toward the wrong type
-        if not ddl_map:
+    def _cast(df: DataFrame, types: dict) -> DataFrame:
+        # pin recorded column TYPES per piece, before any union (inference
+        # types a column per directory; a union would coerce between them)
+        if not types:
             return df
         return df.select(
             *[
-                F.col(c).cast(ddl_map[c]).alias(c) if c in ddl_map else F.col(c)
+                F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
                 for c in df.columns
             ]
         )
@@ -1315,15 +1275,17 @@ def read_snapshot(
         # in the directory names) typed as _MANIFEST.v{v}.json records
         # them: the schema of the files the commit that claimed _v{v}
         # wrote.  A history file vacuum removed, a piece under a shallow
-        # clone's fallback root (its history lives with the source) or an
-        # unrecorded name leaves the piece to schema inference
+        # clone's fallback root (its history lives with the source), a
+        # record that does not parse or an unrecorded name leaves the
+        # piece to schema inference
         if v not in written:
             rec = []
             if os.path.isdir(version_dir(root, v)):
                 try:
                     rec = read_manifest(root, v).get("schema") or []
-                except (FileNotFoundError, ValueError):
-                    pass
+                    spark.read.schema(_ddl(rec))
+                except (FileNotFoundError, ValueError, ParseException):
+                    rec = []
             written[v] = dict(rec)
         types = written[v]
         names = names or [n for n in types if n != partition_col]
@@ -1331,22 +1293,63 @@ def read_snapshot(
             return [[n, types[n]] for n in names]
         return None
 
-    pieces = []
+    part_type = ddl_map.get(partition_col)
+    last_event = max((v for v, _k, _e in _schema_events(manifest)), default=0)
+    # ``basePath`` (an ancestor of the root and every fallback root) plus
+    # ``ignoreInvalidPartitionPaths`` let directories under different
+    # ``_v{N}`` parents share one file index; the option silently drops a
+    # path that is not ``<col>=<value>``, which every path here is
+    opts = {
+        "basePath": os.path.commonpath(
+            [os.path.abspath(r) for r in (root, *manifest.get("fallback_roots", []))]
+        ),
+        "ignoreInvalidPartitionPaths": "true",
+    }
+
+    def _read_dirs(dirs: list[str], cols) -> DataFrame:
+        # the partition column typed as the manifest records it, data
+        # columns as ``cols`` records them, else as the footers infer them
+        if cols:
+            ddl = _ddl([*cols, (partition_col, part_type)])
+            return spark.read.options(**opts).schema(ddl).parquet(*dirs)
+        typed = spark.range(0).select(F.lit(None).cast(part_type).alias(partition_col))
+        data = spark.read.options(**opts).parquet(*dirs).schema
+        schema = [f for f in data if f.name != partition_col] + typed.schema.fields
+        return spark.read.options(**opts).schema(StructType(schema)).parquet(*dirs)
+
+    scans: dict[tuple, list[str]] = {}
+    inferred = []
     for sub, by in (((), by_version), (("_append",), app_by_version)):
         for v, pvals in sorted(by.items()):
             path = os.path.join(_resolve_vdir(root, manifest, v), *sub)
             spark.catalog.refreshByPath(path)
-            df = _read_pinned(spark, path, _piece_columns(v))
-            pieces.append(
-                _tag_wv(
-                    _normalize_types(
-                        _map_physical(df, manifest, v).filter(
-                            F.col(partition_col).cast("string").isin(sorted(pvals))
-                        )
-                    ),
-                    v,
+            dirs = {
+                p: os.path.join(path, _hive_partition_dir(partition_col, p))
+                for p in pvals
+            }
+            found = [d for d in dirs.values() if part_type and os.path.isdir(d)]
+            if len(found) < len(dirs):
+                inferred.append(
+                    (path, v, [p for p, d in dirs.items() if d not in found])
                 )
-            )
+            if found:
+                cols = tuple(map(tuple, _piece_columns(v) or ()))
+                shared = cols and v >= last_event and not seq_aware
+                scans.setdefault((cols, None if shared else v), []).extend(found)
+
+    pieces = []
+    for (cols, v), dirs in scans.items():
+        df = _read_dirs(dirs, cols)
+        if cols and (v is None or v >= last_event):
+            retype = {n: ddl_map[n] for n, t in cols if ddl_map.get(n, t) != t}
+            pieces.append(_tag_wv(_cast(df, retype), v))
+        else:
+            pieces.append(_tag_wv(_cast(_map_physical(df, manifest, v), ddl_map), v))
+    for path, v, pvals in inferred:
+        df = _map_physical(
+            _read_pinned(spark, path, _piece_columns(v)), manifest, v
+        ).filter(F.col(partition_col).cast("string").isin(sorted(pvals)))
+        pieces.append(_tag_wv(_cast(df, ddl_map), v))
 
     def _project_schema(df: DataFrame) -> DataFrame:
         # the recorded schema pins names, order and types — including on
@@ -1402,8 +1405,13 @@ def read_snapshot(
         # missing columns fill with NULLs here and the recorded schema
         # pins names, order and types
         out = out.unionByName(p, allowMissingColumns=True)
-    dv = manifest.get("dv")
-    if dv and dv.get("files"):
+    dv = manifest.get("dv") or {}
+    live_by_version: dict[int, list[str]] = {}
+    for pval, vs in dv.get("files", {}).items():
+        if pval in live_pvals:  # a skipped partition has no rows to delete
+            for dvv in vs:
+                live_by_version.setdefault(int(dvv), []).append(pval)
+    if live_by_version:
         # merge-on-read deletions: anti-join the deletion vectors on
         # (partition, key) — partition included so a key re-inserted
         # into a DIFFERENT partition after its delete is not re-deleted
@@ -1414,10 +1422,6 @@ def read_snapshot(
         # each version's piece must be restricted to the partitions
         # that still reference it or the stale tuples re-delete
         # re-inserted keys.
-        live_by_version: dict[int, list[str]] = {}
-        for pval, vs in dv["files"].items():
-            for dvv in vs:
-                live_by_version.setdefault(int(dvv), []).append(pval)
         vec_cols = [partition_col, *dv["key_cols"]]
         vecs = [
             _read_pinned(
@@ -1494,8 +1498,6 @@ def merge_into_versioned(
     write-audit-publish — see :func:`create_branch`); main's pointer and
     data are untouched until :func:`fast_forward` publishes the branch.
     """
-    from ..operators.merge import _affected_partitions, _merge_resolved
-
     manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
     target = read_snapshot(spark, root, partition_col, ref=ref)
     data_cols = list(target.columns)
@@ -1559,8 +1561,6 @@ def sync_versioned(
     (partition-range predicates prune via the same affected-set
     discovery MERGE uses).  Returns the published version.
     """
-    from ..operators.merge import _merge_resolved
-
     manifest = _canonical_keys(read_manifest(root, ref=ref), partition_col)
     target = read_snapshot(spark, root, partition_col, ref=ref)
     data_cols = list(target.columns)
@@ -1628,7 +1628,6 @@ def optimize_partitions(
     ``(published_version, rewritten_partition_values)`` — the current
     version unchanged with ``[]`` when nothing is fragmented.
     """
-    from ..operators.merge import _hive_partition_dir
     from .compact import dataset_file_stats
 
     manifest = _canonical_keys(read_manifest(root), partition_col)
@@ -1702,8 +1701,6 @@ def cdc_apply_versioned(
     stats/bloom ownership and row counts follow the MERGE path.  Returns
     the published version.
     """
-    from ..operators.merge import _affected_partitions, _merge_resolved
-
     manifest = _canonical_keys(read_manifest(root), partition_col)
     target = read_snapshot(spark, root, partition_col)
     data_cols = list(target.columns)
@@ -3349,8 +3346,6 @@ def files_df(
     version, size.  One filesystem walk of exactly the live version
     directories (the snapshot's real I/O footprint, which is what a
     maintenance job sizing an OPTIMIZE wants to query)."""
-    from ..operators.merge import _hive_partition_dir
-
     manifest = read_manifest(root, version, ref=ref)
     owned: dict[int, set[str]] = {}
     for p, v in manifest["partitions"].items():

@@ -11,8 +11,9 @@ the same *dataflow* on raw parquet, and the cost model is identical:
    makes a *partition-moving* update correct: the key's old partition is
    rewritten without the row, so the key never exists twice.  (a) is a
    tiny broadcast; (b) is one broadcast semi-join of the target against
-   the source's distinct keys — a key-indexed probe of the table, the
-   same cost a table format pays to find the files a MERGE touches.
+   the source's keys — a key-indexed probe of the table, the same cost
+   a table format pays to find the files a MERGE touches.  One
+   ``distinct`` over the union of (a) and (b) dedupes both.
 2. **Full-outer merge on the key.** Column resolution is by an explicit
    source-presence marker (``_in_src``), NOT ``coalesce``: a matched
    source row wins *even where its columns are NULL* (real MERGE
@@ -106,15 +107,10 @@ def _affected_partitions(
     own partitions plus the partitions currently holding a touched key
     (so a key whose partition value *changes* gets its old home rewritten
     too — without this, the old copy survives and the key duplicates)."""
-    src_parts = source.select(partition_col).distinct()
-    old_homes = (
-        target.join(
-            F.broadcast(source.select(*key_cols).distinct()), key_cols, "leftsemi"
-        )
-        .select(partition_col)
-        .distinct()
-    )
-    return src_parts.union(old_homes).distinct()
+    old_homes = target.join(
+        F.broadcast(source.select(*key_cols)), key_cols, "leftsemi"
+    ).select(partition_col)
+    return source.select(partition_col).union(old_homes).distinct()
 
 
 def merge_into(

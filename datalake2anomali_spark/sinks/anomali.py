@@ -104,7 +104,7 @@ class FileBackedAnomaliApi:
         return self._record("tipreport_insert", payload)
 
     def patch_tipreport(self, tipreport_id: int, payload: dict) -> tuple[int, dict]:
-        return self._record("tipreport_update", {"id": tipreport_id, **payload})
+        return self._record("tipreport_update", {**payload, "id": tipreport_id})
 
     # test-side helpers -----------------------------------------------------
     def received(self, kind: str) -> list[dict]:

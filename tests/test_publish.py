@@ -4,6 +4,7 @@ operators/merge.py, compaction collapse, and vacuum GC."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import time
 
@@ -2416,6 +2417,29 @@ def test_unparsable_history_schema_reads_through_inference(
     assert _id_v_p(read_snapshot(spark, root, "p")) == before
 
 
+@pytest.mark.parametrize("schema", [[], None])
+def test_empty_or_missing_history_schema_reads_through_inference(
+    spark, wide_table, tmp_path, schema
+):
+    """A history record whose schema is empty or absent is no record: its
+    pieces (the v5 append-delta included) read identical rows through
+    schema inference, not as pieces with no data columns."""
+    import json
+    import shutil
+
+    root = str(tmp_path / "t")
+    shutil.copytree(wide_table[0], root)
+    before = _id_v_p(read_snapshot(spark, root, "p"))
+    for v in (1, 5):
+        hist = os.path.join(root, f"_MANIFEST.v{v}.json")
+        with open(hist, encoding="utf-8") as fh:
+            rec = json.load(fh)
+        rec["schema"] = schema
+        with open(hist, "w", encoding="utf-8") as fh:
+            json.dump(rec, fh)
+    assert _id_v_p(read_snapshot(spark, root, "p")) == before
+
+
 def test_shallow_clone_fallback_piece_reads_identical_rows(
     spark, wide_table, tmp_path
 ):
@@ -2477,3 +2501,188 @@ def test_legacy_manifest_keys_read_and_rewrite_canonically(spark, tmp_path):
     assert set(m2["stats"]) == {"true", "false"}
     assert m2["dv"]["files"] == {"false": [2]}
     assert m2["dv"]["deleted"] == {"false": 1}
+
+
+_PARTITION_VALUES = {
+    "string": [
+        "007", "08", "1e3", "0.50", "2024-01-05",
+        "a:b", "x/y", "5%", "k=v", "s p", "é",
+    ],
+    "date": [
+        datetime.date(2024, 1, 5),
+        datetime.date(1999, 12, 31),
+        datetime.date(2024, 2, 29),
+    ],
+    "timestamp": [
+        datetime.datetime(2024, 1, 5, 10, 0, 0),
+        datetime.datetime(2024, 1, 5, 10, 0, 0, 500000),
+        datetime.datetime(1999, 12, 31, 23, 59, 59),
+    ],
+    "boolean": [True, False],
+    "double": [0.5, 1000.0, 1e10, -2.25],
+}
+
+
+@pytest.mark.parametrize("ddl", sorted(_PARTITION_VALUES))
+def test_partition_values_round_trip_through_every_dml_verb(spark, tmp_path, ddl):
+    """A partition value reads back as written, and its manifest key is its
+    own string rendering, after a create, a narrow MERGE, a copy-on-write
+    UPDATE and DELETE, and a merge-on-read DELETE and UPDATE: the column is
+    typed as the manifest records it, never re-inferred from a directory
+    (a STRING '007' written alone would infer INT and read back '7')."""
+    from datalake2anomali_spark.io.publish import (
+        delete_from_versioned,
+        update_versioned,
+    )
+
+    vals = _PARTITION_VALUES[ddl]
+    n = len(vals)
+    root = str(tmp_path / "t")
+    model = {10 * i + j: (j, vals[i]) for i in range(n) for j in range(3)}
+    keys = {
+        r.raw: r.key
+        for r in spark.createDataFrame([(x,) for x in vals], f"raw {ddl}")
+        .select("raw", F.col("raw").cast("string").alias("key"))
+        .collect()
+    }
+
+    def check():
+        m = read_manifest(root)
+        live = {p for _v, p in model.values()}
+        assert set(m["partitions"]) == {keys[p] for p in live}
+        assert set(m["rows"]) == set(m["partitions"])
+        snap = read_snapshot(spark, root, "p")
+        assert dict(snap.dtypes)["p"] == ddl
+        got = sorted((r.id, r.v, r.p) for r in snap.collect())
+        assert got == sorted((i, v, p) for i, (v, p) in model.items())
+
+    init_table(
+        spark,
+        spark.createDataFrame(
+            [(i, v, p) for i, (v, p) in model.items()], f"id long, v long, p {ddl}"
+        ),
+        root,
+        "p",
+    )
+    check()
+    src = spark.createDataFrame(
+        [(0, 50, vals[0]), (999, 51, vals[0])], f"id long, v long, p {ddl}"
+    )
+    merge_into_versioned(spark, root, src, ["id"], "p")
+    model.update({0: (50, vals[0]), 999: (51, vals[0])})
+    check()
+    uid = 10 * (1 % n) + 1
+    update_versioned(spark, root, "p", F.col("id") == uid, {"v": F.lit(-1)})
+    model[uid] = (-1, model[uid][1])
+    check()
+    did = 10 * (2 % n) + 2
+    delete_from_versioned(spark, root, "p", F.col("id") == did)
+    del model[did]
+    check()
+    mid = 10 * (3 % n)
+    delete_from_versioned(
+        spark, root, "p", F.col("id") == mid, mode="merge_on_read", key_cols=["id"]
+    )
+    del model[mid]
+    check()
+    aid = 10 * (4 % n) + 1
+    update_versioned(
+        spark, root, "p", F.col("id") == aid, {"v": F.lit(-2)},
+        mode="merge_on_read", key_cols=["id"],
+    )
+    model[aid] = (-2, model[aid][1])
+    check()
+
+
+def test_snapshot_reads_live_directories_as_one_scan(spark, tmp_path):
+    """Five live versions read as one data scan (plus one per live
+    deletion-vector version) whose files are exactly the live ones: no
+    superseded file of an older version is listed, and no live partition
+    directory is dropped."""
+    from urllib.parse import unquote, urlparse
+
+    from datalake2anomali_spark.io.publish import _dv_versions, delete_from_versioned
+
+    root = str(tmp_path / "t")
+    df = spark.range(0, 60, 1, 2).select(
+        "id",
+        (F.col("id") * 2).alias("v"),
+        F.format_string("p%02d", F.col("id") % 12).alias("p"),
+    )
+    init_table(spark, df, root, "p")
+    for pid in (1, 2, 3, 4):
+        src = spark.createDataFrame(
+            [(pid, -pid, f"p{pid:02d}")], "id long, v long, p string"
+        )
+        merge_into_versioned(spark, root, src, ["id"], "p")
+    delete_from_versioned(
+        spark, root, "p", F.col("id") == 5, mode="merge_on_read", key_cols=["id"]
+    )
+    m = read_manifest(root)
+    assert len(set(m["partitions"].values())) == 5 and not m.get("appends")
+    dv_versions = set(_dv_versions(m))
+    snap = read_snapshot(spark, root, "p")
+    plan = snap._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1 + len(dv_versions), plan
+
+    def parquet_files(d):
+        return {os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")}
+
+    live = set()
+    for p, v in m["partitions"].items():
+        live |= parquet_files(os.path.join(version_dir(root, v), f"p={p}"))
+    for dvv in dv_versions:
+        live |= parquet_files(os.path.join(version_dir(root, dvv), "_dv"))
+    assert {unquote(urlparse(u).path) for u in snap.inputFiles()} == live
+    assert sorted(r.id for r in snap.collect()) == [i for i in range(60) if i != 5]
+
+
+def test_keys_naming_no_directory_read_through_inference(spark, tmp_path):
+    """Older code keyed a STRING partition by its inferred rendering ('007'
+    rewritten alone keyed '7'), so the key names no directory.  Such a key
+    reads its version through partition inference, as it always did:
+    every row is still read."""
+    import json
+
+    from datalake2anomali_spark.io.publish import MANIFEST
+
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "007"), (2, "abc"), (3, "08")], "id long, p string"
+    )
+    init_table(spark, df, root, "p")
+    src = spark.createDataFrame([(4, "007")], "id long, p string")
+    v = merge_into_versioned(spark, root, src, ["id"], "p")
+    path = os.path.join(root, MANIFEST)
+    with open(path, encoding="utf-8") as fh:
+        m = json.load(fh)
+    (old,) = [p for p, pv in m["partitions"].items() if pv == v]
+    for key in ("partitions", "rows"):
+        m[key]["7"] = m[key].pop(old)
+    with open(path, "w", encoding="utf-8") as fh:
+        json.dump(m, fh)
+    got = sorted((r.id, r.p) for r in read_snapshot(spark, root, "p").collect())
+    assert got == [(1, "7"), (2, "abc"), (3, "08"), (4, "7")]
+
+
+def test_pieces_read_alone_keep_their_partition_values(spark, tmp_path):
+    """Pieces outside the shared scan — renamed or added over, under a
+    shallow clone's fallback root, or without a history record — still
+    read the partition column typed: values that would infer as numbers
+    ('007', '08') are neither re-keyed nor dropped."""
+    from datalake2anomali_spark.io.publish import alter_table_columns, clone_table
+
+    root, dst = str(tmp_path / "t"), str(tmp_path / "clone")
+    df = spark.createDataFrame([(1, "007"), (2, "08")], "id long, p string")
+    init_table(spark, df, root, "p")
+    want = [(1, "007"), (2, "08")]
+
+    def rows(at):
+        return sorted((r.id, r.p) for r in read_snapshot(spark, at, "p").collect())
+
+    alter_table_columns(root, add=[("x", "int")])
+    assert rows(root) == want
+    clone_table(root, dst)
+    assert rows(dst) == want
+    os.remove(os.path.join(root, "_MANIFEST.v1.json"))
+    assert rows(root) == want

@@ -106,3 +106,13 @@ def test_write_tipreport_upserts_routes(spark, tmp_path):
     assert sorted(p["name"] for p in inserts) == ["adv-1", "adv-3"]
     assert [p["id"] for p in updates] == [41]
     assert updates[0]["name"] == "adv-2"
+
+
+def test_patch_tipreport_records_the_tipreport_id_over_a_payload_id(tmp_path):
+    """An update payload may carry its own ``id`` (an advisory id from the
+    source); the recorded request still names the tipreport it patches."""
+    api = FileBackedAnomaliApi(str(tmp_path))
+    status, _ = api.patch_tipreport(41, {"id": "adv-7", "name": "adv-7"})
+    assert status == 202
+    (rec,) = api.received("tipreport_update")
+    assert rec["id"] == 41 and rec["name"] == "adv-7"
