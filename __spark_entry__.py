@@ -10,6 +10,7 @@ bit regardless of partitioning.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections.abc import Callable
@@ -40,185 +41,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return relational.q5_local_supplier(spark, "/root/testdata/sf0.001")
 
 
-# Registration order doubles as the driver gate's execution order, and the
-# gate checks exactly the FIRST 50 entries (observed rounds 2-6).  With the
-# registry past twice the window, the invariant is now the staleness bound
-# machine-checked against docs/rotation_ledger.json (derived from the
-# committed CORRECTNESS_r*.json files by tools/rotation_ledger.py): a query
-# last certified in round L re-enters the window no later than round
-# L + staleness_bound, and a never-certified query is always in-window.
-# tests/test_entry_contract.py asserts the ledger, the bound, and the
-# window bookkeeping; no literal counts here (they drift — ADVICE r5).
-#  - _PRIORITY (the round-17 window): ALL 50 entries whose last
-#    certification is round 14, in their CORRECTNESS_r14 order (bound-4
-#    deadline round 18; after the r16 window certified the r13 block,
-#    the r14 block is exactly the stalest cohort — window = 50,
-#    cascade 0).
-#  - _TAIL holds exactly the overflow, stalest first:
-#    the round-15-certified block (deadline round 19) in CORRECTNESS_r15
-#    order, then the round-16-certified block (deadline round 20) in
-#    CORRECTNESS_r16 order.
-_PRIORITY: tuple[str, ...] = (
-    # last driver row round 14 — deadline round 18 (CORRECTNESS_r14 order)
-    "ioc_incremental_cursor",
-    "dedup_ngram_jaccard",
-    "corpus_stats",
-    "text_profile",
-    "ann_cosine_topk",
-    "ioc_rest_source_pipeline",
-    "stream_interval_join_full",
-    "cdc_view_maintenance",
-    "delete_restore_history",
-    "hidden_partition_pruning",
-    "merge_versioned",
-    "fuzzy_match2",
-    "stream_scd2",
-    "ioc_payload_expiration",
-    "merge_upsert",
-    "exact_quantiles",
-    "cms_counts",
-    "data_quality_audit",
-    "asof_join_click_error",
-    "stream_dedup_late",
-    "sessionize",
-    "grouped_rollup",
-    "running_window",
-    "ioc_payload_json",
-    "dedup_clusters",
-    "dedup_incremental",
-    "embedding_neardup",
-    "stratified_sample",
-    "pack_sequences",
-    "corpus_roundtrip",
-    "scalar_datetime_json",
-    "hypertable_rollup",
-    "status_priority_pivot",
-    "sketch_stats",
-    "range_join_error_clicks",
-    "distinct_set_ops",
-    "ann_lsh_topk",
-    "dedup_simhash",
-    "stream_tumbling_counts",
-    "ann_ivf_topk",
-    "decontaminate",
-    "bm25_scores",
-    "update_set",
-    "update_mor",
-    "multi_statement_txn",
-    "secondary_index_lookup",
-    "cross_table_txn",
-    "shallow_clone_divergence",
-    "branch_merge_disjoint",
-    "stream_into_hidden",
-)
-
-#: Exactly the overflow past the gate window (asserted in
-#: tests/test_entry_contract.py), stalest first.
-_TAIL: tuple[str, ...] = (
-    # last driver row round 15 — deadline round 19 (CORRECTNESS_r15 order)
-    "column_evolution",
-    "ioc_advisory_enrichment",
-    "stateful_user_profiles",
-    "dedup_substrings",
-    "docs_clean_pipeline",
-    "stream_interval_join",
-    "ann_topk_quantized",
-    "embedding_neardup_lsh",
-    "salted_skew_stats",
-    "dedup_minhash_lsh",
-    "dedup_clusters_star",
-    "embedding_kmeans",
-    "batch_windows",
-    "top_terms",
-    "ioc_upsert_routing",
-    "q1_pricing_summary",
-    "setsim_join",
-    "percentile_cont",
-    "snapshot_pruned_scan",
-    "attribution_credit",
-    "global_rank",
-    "cube_stats",
-    "khop_features",
-    "stream_interval_join_outer",
-    "table_changes",
-    "equi_depth_hist",
-    "window_rank_funcs",
-    "groupwise_quantiles",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "k_anonymity",
-    "stream_upsert_exactly_once",
-    "cdf_probe",
-    "pagerank_dangling",
-    "groupwise_percentile_cont",
-    "q9_product_profit",
-    "snapshot_bloom_scan",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "region_customer_stats",
-    "stream_dedup_events",
-    "ioc_payload_objects",
-    "topk_per_group",
-    "dedup_exact",
-    "chunk_documents",
-    "mixture_sample",
-    "jsonl_roundtrip",
-    "asof_join_tolerance",
-    "multimodal_ops",
-    "stream_burst_alerts",
-    # last driver row round 16 — deadline round 20 (CORRECTNESS_r16 order)
-    "string_funcs",
-    "burst_alerts",
-    "dedup_keep_best",
-    "heavy_hitters",
-    "zorder_key",
-    "schema_evolution",
-    "gap_fill_locf",
-    "scd2_history",
-    "funnel_analysis",
-    "cohort_retention",
-    "ewma_features",
-    "table_diff",
-    "fuzzy_match",
-    "compaction_roundtrip",
-    "stream_sessionize",
-    "pagerank",
-    "phrase_search",
-    "incremental_view",
-    "rolling_median",
-    "sync_versioned",
-    "branch_wap_publish",
-    "deletion_vectors",
-    "cdc_apply_mixed",
-    "spec_evolution",
-    "multi_field_spec",
-    "metadata_tables",
-    "optimize_zorder",
-    "check_constraints",
-    "negative_samples",
-    "weighted_sample_aes",
-    "pca_project",
-    "ann_pq_topk",
-    "k_core_decomposition",
-    "bpe_tokenize",
-    "asof_join_directions",
-    "bloom_semi_join",
-    "csv_orc_roundtrip",
-    "stream_enrich_snapshot",
-    "table_follower_rollup",
-    "ann_ivfpq_topk",
-    "multi_table_txn",
-    "merge_schema_widening",
-    "triangle_count",
-    "markov_transitions",
-    "stream_view_maintenance",
-    "json_flatten",
-    "time_travel",
-    "robust_outliers",
-    "item_similarity",
-    "ioc_indicators_observed",
-)
-
 _MODULES = (
     relational,
     ioc_queries,
@@ -234,11 +56,31 @@ _MODULES = (
 )
 
 
-def _ordered(items: dict) -> dict:
-    pri = {n: items[n] for n in _PRIORITY if n in items}
-    pri.update({n: v for n, v in items.items() if n not in pri and n not in _TAIL})
-    pri.update({n: items[n] for n in _TAIL if n in items})
-    return pri
+# The driver gate checks exactly the FIRST 50 entries of queries().  The
+# order is stalest-first: each name sorts by the round the driver last
+# certified it in, as docs/rotation_ledger.json records (derived from the
+# committed CORRECTNESS_r*.json files by tools/rotation_ledger.py); a name
+# never certified sorts before every other, and ties keep registration
+# order (_MODULES, then each QUERIES).  So every query the staleness bound
+# makes mandatory lands in the window (tests/test_entry_contract.py), and
+# the per-round chore is rerunning the tool, then sweeping the first 50.
+_LEDGER_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "docs", "rotation_ledger.json"
+)
+
+
+def _last_certified() -> dict[str, int | None]:
+    with open(_LEDGER_PATH) as fh:
+        ledger = json.load(fh)
+    return {name: st["last_certified"] for name, st in ledger["queries"].items()}
+
+
+def _ordered(items: dict, last_certified: dict[str, int | None]) -> dict:
+    def staleness(name: str) -> int:
+        last = last_certified.get(name)
+        return -1 if last is None else last
+
+    return {name: items[name] for name in sorted(items, key=staleness)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -246,7 +88,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         out.update({name: _wrap(fn) for name, fn in mod.QUERIES.items()})
-    return _ordered(out)
+    return _ordered(out, _last_certified())
 
 
 def oracle_sql() -> dict[str, str]:
@@ -254,7 +96,7 @@ def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
     for mod in _MODULES:
         out.update(mod.ORACLES)
-    return _ordered(out)
+    return _ordered(out, _last_certified())
 
 
 def _wrap(fn):

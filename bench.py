@@ -300,7 +300,8 @@ def main() -> None:
     # now carrying a budget-bounded top-N per-query digest (biggest cold
     # rows first) so the driver's round-over-round and core-scaling
     # comparisons see per-query numbers again (VERDICT r16 task 2); the
-    # full record is the line above / docs/bench_local_r*.json.
+    # full record is the line above / docs/bench_local_r17_final.json
+    # (older rounds' records: ``git show a3c568b:docs/bench_local_r16_final.json``).
     dig_c, dig_w = _tail_digest(timings, warm_timings)
     print(
         json.dumps(

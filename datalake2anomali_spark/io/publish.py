@@ -1167,8 +1167,8 @@ def read_snapshot(
     version too when append-deltas tag rows with ``_wv``): the live
     ``<version dir>/<col>=<value>`` directories, partition column typed
     as the manifest records it.  A piece with no usable record (history
-    vacuumed, a fallback root, an empty or unparseable schema) or a
-    rename/add after it reads its directories alone, data columns as the
+    vacuumed, an empty or unparseable schema) or a rename/add after it
+    reads its directories alone, data columns as the
     footers infer them or as recorded.  Only a key naming no directory
     (older code keyed some values under inference) reads its version
     through partition inference and ``isin``.
@@ -1274,15 +1274,16 @@ def read_snapshot(
         # ``names`` (default: every data column — partition values live
         # in the directory names) typed as _MANIFEST.v{v}.json records
         # them: the schema of the files the commit that claimed _v{v}
-        # wrote.  A history file vacuum removed, a piece under a shallow
-        # clone's fallback root (its history lives with the source), a
-        # record that does not parse or an unrecorded name leaves the
-        # piece to schema inference
+        # wrote, read from the root that holds _v{v} (a shallow clone's
+        # fallback pieces have their history with the source).  A history
+        # file vacuum removed, a record that does not parse or an
+        # unrecorded name leaves the piece to schema inference
         if v not in written:
             rec = []
-            if os.path.isdir(version_dir(root, v)):
+            vdir = _resolve_vdir(root, manifest, v)
+            if os.path.isdir(vdir):
                 try:
-                    rec = read_manifest(root, v).get("schema") or []
+                    rec = read_manifest(os.path.dirname(vdir), v).get("schema") or []
                     spark.read.schema(_ddl(rec))
                 except (FileNotFoundError, ValueError, ParseException):
                     rec = []
@@ -1423,29 +1424,25 @@ def read_snapshot(
         # that still reference it or the stale tuples re-delete
         # re-inserted keys.
         vec_cols = [partition_col, *dv["key_cols"]]
-        vecs = [
-            _read_pinned(
+        allv = None
+        for dvv, pvals in sorted(live_by_version.items()):
+            piece = _read_pinned(
                 spark,
                 os.path.join(_resolve_vdir(root, manifest, dvv), "_dv"),
                 _piece_columns(dvv, vec_cols),
             ).filter(
                 F.col(partition_col).cast("string").isin(sorted(pvals))
             )
-            for dvv, pvals in sorted(live_by_version.items())
-        ]
+            if seq_aware:
+                # sequence-aware application: tag every vector tuple with
+                # its commit version and anti-join on keys AND
+                # ``_dvv > _wv`` — a vector deletes only rows OLDER than
+                # itself, so an update's replacement rows (written at the
+                # vector's own version) survive while the rows they
+                # replace die
+                piece = piece.withColumn("_dvv", F.lit(dvv))
+            allv = piece if allv is None else allv.unionByName(piece)
         if seq_aware:
-            # sequence-aware application: tag every vector tuple with its
-            # commit version and anti-join on keys AND ``_dvv > _wv`` —
-            # a vector deletes only rows OLDER than itself, so an
-            # update's replacement rows (written at the vector's own
-            # version) survive while the rows they replace die
-            vecs = [
-                piece.withColumn("_dvv", F.lit(dvv))
-                for piece, (dvv, _p) in zip(vecs, sorted(live_by_version.items()))
-            ]
-            allv = vecs[0]
-            for piece in vecs[1:]:
-                allv = allv.unionByName(piece)
             probe = allv.select(
                 partition_col, *dv["key_cols"], "_dvv"
             ).distinct().alias("_dvp")
@@ -1458,9 +1455,6 @@ def read_snapshot(
             cond = cond & (F.col("_dvp._dvv") > F.col("_dvl._wv"))
             out = left.join(probe, cond, "left_anti")
         else:
-            allv = vecs[0]
-            for piece in vecs[1:]:
-                allv = allv.unionByName(piece)
             out = out.join(
                 allv.select(partition_col, *dv["key_cols"]).distinct(),
                 [partition_col, *dv["key_cols"]],

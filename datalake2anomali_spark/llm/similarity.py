@@ -84,21 +84,6 @@ def hyperplane_planes(dim: int = 64, n_planes: int = 12, seed: int = 42) -> list
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def bucket_col(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: the sign-bit string of the plane projections.
-
-    Planes are embedded as array literals, so the projection is a codegen'd
-    fold per plane — no Python, no shuffle; the bucket id is computable at
-    scan time for both corpus and queries.
-    """
-    bits = []
-    for p in planes:
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        proj = _dot(vec, plane)
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _table_buckets(vec: Column, planes: list[list[float]], n_tables: int, bits: int) -> Column:
     """array<struct<table,bucket>> — one LSH bucket per hash table.
 

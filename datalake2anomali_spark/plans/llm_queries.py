@@ -49,7 +49,6 @@ from ..llm.text import (
     lang_id,
     normalize_text,
     pred_lang_col,
-    repetition_stats,
     scrub_pii,
     text_stats,
     token_counts,
@@ -247,30 +246,6 @@ SELECT doc_id,
        md5(text) AS checksum
 FROM documents
 """
-
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling (64-byte frames, every 2nd) over the binary payload.
-
-    The mapInPandas 1-to-N fan-out checked value-for-value against a DuckDB
-    substring/md5 twin — valid because the fixture text is pure ASCII, so
-    byte offsets equal character offsets.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    frames = sample_frames(with_binary_payload(docs), frame_bytes=64, every=2)
-    return frames.select("doc_id", "frame_idx", "frame_checksum")
-
-
-MULTIMODAL_FRAMES_SQL = """
-WITH f AS (
-  SELECT doc_id, text,
-         unnest(range(0, CAST(ceil(length(text) / 64.0) AS BIGINT), 2)) AS fi
-  FROM documents
-)
-SELECT doc_id, CAST(fi AS INT) AS frame_idx,
-       md5(substring(text, CAST(fi * 64 + 1 AS BIGINT), 64)) AS frame_checksum
-FROM f
-"""
-
 
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_counts(load_table(spark, sf_dir, "documents"))
@@ -613,58 +588,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_pairs,
 FROM e a JOIN e b ON a.vec_id < b.vec_id
 WHERE round(list_dot_product(a.v, b.v)
             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.4
-"""
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filters, map-only.
-
-    The Spark side finds each doc's most frequent bigram with a row-local
-    sorted-run-length pass (no shuffle); the DuckDB twin computes the same
-    mode by unnest + GROUP BY — a different algorithm, so the value match
-    checks the statistic, not the trick.
-    """
-    return repetition_stats(load_table(spark, sf_dir, "documents"))
-
-
-REPETITION_STATS_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-g AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= 2
-              THEN [array_to_string(list_slice(w, i, i + 1), ' ') for i in range(1, len(w))]
-              ELSE [] END AS bg,
-         CASE WHEN len(w) >= 3
-              THEN [array_to_string(list_slice(w, i, i + 2), ' ') for i in range(1, len(w) - 1)]
-              ELSE [] END AS tg
-  FROM t
-),
-bx AS (
-  SELECT doc_id, unnest(bg) AS g2 FROM g
-),
-bc AS (
-  SELECT doc_id, g2, COUNT(*) AS c FROM bx GROUP BY doc_id, g2
-),
-bm AS (
-  SELECT doc_id, CAST(MAX(c) AS INTEGER) AS max_bigram_count FROM bc GROUP BY doc_id
-),
-f AS (
-  SELECT g.doc_id,
-         CAST(len(bg) AS INTEGER) AS n_bigrams,
-         COALESCE(bm.max_bigram_count, 0) AS max_bigram_count,
-         CASE WHEN len(bg) > 0
-              THEN CAST(COALESCE(bm.max_bigram_count, 0) AS DOUBLE) / len(bg)
-              ELSE 0.0 END AS max_bigram_frac,
-         CASE WHEN len(tg) > 0
-              THEN CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg)
-              ELSE 0.0 END AS dup_trigram_frac
-  FROM g LEFT JOIN bm ON g.doc_id = bm.doc_id
-)
-SELECT doc_id, n_bigrams, max_bigram_count, max_bigram_frac, dup_trigram_frac,
-       (max_bigram_frac <= 0.2 AND dup_trigram_frac <= 0.3) AS gopher_keep
-FROM f
 """
 
 
@@ -1962,8 +1885,8 @@ FROM documents WHERE lang = 'en'
 # (text_stats, lang_id, doc_fingerprint, token_counts, repetition_stats,
 # normalize_text, scrub_pii) and the two multimodal queries are registered as
 # the merged `text_profile` / `multimodal_ops` rows so the driver's 50-entry
-# window certifies every operator family each round.  The standalone
-# functions, SQL twins, and pytest coverage all remain.
+# window certifies every operator family each round.  The library functions
+# and their pytest coverage all remain.
 QUERIES = {
     "dedup_exact": q_dedup_exact,
     "dedup_substrings": q_dedup_substrings,

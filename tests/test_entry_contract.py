@@ -8,7 +8,9 @@ later than round L + staleness_bound, and a query with no driver row yet
 must always be in-window.  ``docs/rotation_ledger.json`` records the
 per-query state; ``tools/rotation_ledger.py`` re-derives it from the
 committed CORRECTNESS_r*.json evidence, so a new round's evidence file
-landing in git makes these tests fail until the rotation chore is done.
+landing in git makes these tests fail until the tool is rerun.
+``queries()`` orders the registry stalest-first by that ledger, so the
+window needs no hand rotation.
 """
 
 from __future__ import annotations
@@ -22,34 +24,6 @@ from tools.rotation_ledger import LEDGER_PATH, build_ledger
 GATE_WINDOW = 50
 
 
-def test_window_overflow_is_exactly_the_tail():
-    ordered = list(entrymod.queries())
-    assert len(ordered) > GATE_WINDOW, "fewer registrations than the gate window"
-    assert len(ordered) - GATE_WINDOW == len(entrymod._TAIL), (
-        f"{len(ordered)} registered − {GATE_WINDOW} window ≠ {len(entrymod._TAIL)} "
-        "tail entries; the overflow must be exactly _TAIL or an undocumented "
-        "query silently falls out of the checked window"
-    )
-    assert ordered[GATE_WINDOW:] == list(entrymod._TAIL)
-
-
-def test_priority_lands_inside_the_window():
-    ordered = list(entrymod.queries())
-    window = set(ordered[:GATE_WINDOW])
-    missing = [n for n in entrymod._PRIORITY if n not in window]
-    assert not missing, f"_PRIORITY entries outside the checked window: {missing}"
-
-
-def test_priority_and_tail_are_registered_and_disjoint():
-    names = set(entrymod.queries())
-    for group in (entrymod._PRIORITY, entrymod._TAIL):
-        unknown = [n for n in group if n not in names]
-        assert not unknown, f"unregistered names: {unknown}"
-        assert len(set(group)) == len(group), "duplicate names in ordering tuple"
-    overlap = set(entrymod._PRIORITY) & set(entrymod._TAIL)
-    assert not overlap, f"_PRIORITY ∩ _TAIL must be empty: {overlap}"
-
-
 def test_staleness_ledger_matches_committed_evidence():
     """The committed ledger must equal the derivation from CORRECTNESS files.
 
@@ -61,8 +35,8 @@ def test_staleness_ledger_matches_committed_evidence():
     with open(LEDGER_PATH) as fh:
         committed = json.load(fh)
     assert committed == build_ledger(), (
-        "rotation ledger stale — rerun tools/rotation_ledger.py and rotate "
-        "_PRIORITY/_TAIL for the new round"
+        "rotation ledger stale — rerun tools/rotation_ledger.py, then sweep "
+        "the new first 50 with tools/check_oracle.py at sf0.01"
     )
 
 
@@ -79,7 +53,7 @@ def test_staleness_bound_is_satisfied_by_the_window():
         if last is None:
             # never certified: first exposure cannot be deferred at all
             if name not in window:
-                overdue.append(f"{name} (never certified, registered r{st['registered']})")
+                overdue.append(f"{name} (never certified)")
         elif next_round >= last + bound and name not in window:
             overdue.append(f"{name} (last certified r{last}, deadline r{last + bound})")
     assert not overdue, (
@@ -103,6 +77,13 @@ def test_staleness_bound_is_satisfiable():
         f"{len(mandatory)} mandatory entries exceed the {GATE_WINDOW}-row window; "
         "pause registrations or raise the bound honestly"
     )
+
+
+def test_stalest_first_with_uncertified_names_leading():
+    """Missing and never-certified names lead; ties keep registration order."""
+    items = dict.fromkeys(["a", "b", "c", "d", "e"])
+    last = {"a": 15, "b": None, "c": 14, "e": 15}
+    assert list(entrymod._ordered(items, last)) == ["b", "d", "c", "a", "e"]
 
 
 def test_every_query_has_oracle_or_documented_exception():

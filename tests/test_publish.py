@@ -2224,24 +2224,31 @@ def _id_v_p(df):
     return sorted((r["id"], r["v"], r["p"]) for r in df.collect())
 
 
-def test_read_snapshot_plans_without_spark_jobs(spark, wide_table):
+def test_read_snapshot_plans_without_spark_jobs(spark, wide_table, tmp_path):
     """Building a snapshot read launches no Spark job: the partition
     directories list on the driver and every piece reads under the
     schema its commit recorded, so no listing or footer-inference job
-    runs before the first data job."""
+    runs before the first data job.  A shallow clone's pieces live under
+    the source root, which also holds the history that records them."""
+    from datalake2anomali_spark.io.publish import clone_table
+
     root, model = wide_table
     m = read_manifest(root)
     assert len(m["partitions"]) >= 40
     assert len(set(m["partitions"].values())) >= 3
     assert m["dv"]["files"] and m["appends"]
+    clone = str(tmp_path / "clone")
+    clone_table(root, clone)
     with _JobCount(spark) as jc:
         full = read_snapshot(spark, root, "p")
         point = read_snapshot(spark, root, "p", eq_predicate=("id", 7))
         zone = read_snapshot(spark, root, "p", predicate=("v", 0, 30))
         asof = read_snapshot(spark, root, "p", version=2)
+        cloned = read_snapshot(spark, clone, "p")
     assert jc.jobs == 0
     want = sorted((i, v, p) for i, (v, p) in model.items())
     assert _id_v_p(full) == want
+    assert _id_v_p(cloned) == want
     assert _id_v_p(point) == [(7, -7, "p07")]
     assert _id_v_p(zone) == [r for r in want if 0 <= r[1] <= 30]
     assert len(asof.collect()) == 480

@@ -11,11 +11,15 @@ window, the achievable invariant (VERDICT r6 #1) is:
 
 This script derives ``{query: last_certified_round}`` from the committed
 ``CORRECTNESS_r*.json`` evidence files (a row counts only when rows,
-schema and value-hash all match with no error) and writes
-``docs/rotation_ledger.json``.  ``tests/test_entry_contract.py`` asserts
-the committed ledger equals this derivation and that the current
-``_PRIORITY`` window satisfies the bound — so a new round's evidence
-file landing in git forces the rotation chore before tests go green.
+schema and value-hash all match with no error; a query with no such row
+records ``null``) and writes ``docs/rotation_ledger.json``.
+``__spark_entry__.queries()`` orders the registry stalest-first by that
+ledger (never-certified first, ties in registration order), so the ledger
+IS the window.  ``tests/test_entry_contract.py`` asserts the committed
+ledger equals this derivation and that the window satisfies the bound —
+so a new round's evidence file landing in git fails the tests until the
+per-round chore is done: rerun this script, then sweep the new first 50
+with ``tools/check_oracle.py`` at sf0.01.
 
 Usage:  python tools/rotation_ledger.py [--check]
 """
@@ -29,7 +33,11 @@ import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-LEDGER_PATH = os.path.join(REPO, "docs", "rotation_ledger.json")
+sys.path.insert(0, REPO)
+
+import __spark_entry__ as entrymod  # noqa: E402
+
+LEDGER_PATH = entrymod._LEDGER_PATH
 GATE_WINDOW = 50
 # Why 4 (raised from 3 in round 12): the registry is at its 150-entry
 # certifiable ceiling over a 50-row window, so a perfect 3-round cycle
@@ -44,66 +52,6 @@ GATE_WINDOW = 50
 # cascade stays size-1 forever.  This is the "raise the bound honestly"
 # branch of tests/test_entry_contract.py's satisfiability assertion.
 STALENESS_BOUND = 4
-
-#: Round in which each never-yet-certified query was first registered
-#: (needed because the evidence files cannot date a query they have no
-#: row for).  Entries are removed once the query earns its first row.
-REGISTERED_ROUND: dict[str, int] = {
-    "update_set": 11,
-    "update_mor": 11,
-    "multi_statement_txn": 11,
-    "secondary_index_lookup": 11,
-    "cross_table_txn": 11,
-    "shallow_clone_divergence": 11,
-    "branch_merge_disjoint": 11,
-    "column_evolution": 11,
-    "stream_into_hidden": 11,
-    "sync_versioned": 10,
-    "branch_wap_publish": 10,
-    "deletion_vectors": 10,
-    "cdc_apply_mixed": 10,
-    "spec_evolution": 10,
-    "multi_field_spec": 10,
-    "metadata_tables": 10,
-    "optimize_zorder": 10,
-    "check_constraints": 10,
-    "negative_samples": 10,
-    "weighted_sample_aes": 10,
-    "pca_project": 10,
-    "ann_pq_topk": 10,
-    "k_core_decomposition": 10,
-    "bpe_tokenize": 10,
-    "asof_join_directions": 10,
-    "bloom_semi_join": 10,
-    "csv_orc_roundtrip": 10,
-    "stream_enrich_snapshot": 10,
-    "table_follower_rollup": 10,
-    "ann_ivfpq_topk": 10,
-    "multi_table_txn": 10,
-    "merge_schema_widening": 10,
-    "stream_interval_join_full": 8,
-    "cdc_view_maintenance": 8,
-    "delete_restore_history": 8,
-    "hidden_partition_pruning": 8,
-    "attribution_credit": 6,
-    "global_rank": 6,
-    "cube_stats": 6,
-    "khop_features": 6,
-    "stream_interval_join_outer": 6,
-    "table_changes": 6,
-    "equi_depth_hist": 6,
-    "window_rank_funcs": 6,
-    "groupwise_quantiles": 6,
-    "q7_volume_shipping": 6,
-    "q8_market_share": 6,
-    "k_anonymity": 6,
-    "stream_upsert_exactly_once": 6,
-    "cdf_probe": 6,
-    "pagerank_dangling": 7,
-    "groupwise_percentile_cont": 7,
-    "q9_product_profit": 7,
-    "snapshot_bloom_scan": 7,
-}
 
 
 def certified_rows() -> dict[str, int]:
@@ -126,23 +74,12 @@ def certified_rows() -> dict[str, int]:
 
 
 def build_ledger() -> dict:
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as entrymod
-
-    registered = list(entrymod.queries())
+    # Registration order, straight from the registries: queries() orders by
+    # the ledger this function writes, so it cannot be the source.
+    registered = dict.fromkeys(n for mod in entrymod._MODULES for n in mod.QUERIES)
     last = certified_rows()
     next_round = max(last.values()) + 1
-    queries = {}
-    for name in registered:
-        entry: dict = {"last_certified": last.get(name)}
-        if name not in last:
-            if name not in REGISTERED_ROUND:
-                raise SystemExit(
-                    f"{name} has no driver row and no REGISTERED_ROUND entry; "
-                    "add it to tools/rotation_ledger.py"
-                )
-            entry["registered"] = REGISTERED_ROUND[name]
-        queries[name] = entry
+    queries = {name: {"last_certified": last.get(name)} for name in registered}
     return {
         "gate_window": GATE_WINDOW,
         "staleness_bound": STALENESS_BOUND,
