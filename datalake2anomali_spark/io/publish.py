@@ -26,6 +26,21 @@ partition column typed as recorded rather than inferred from the names.
 The live-version count stays small because every
 :func:`compact_versioned` collapses the table back to a single version.
 
+Every data commit runs one of four private tails — claim a version,
+write, build the manifest, publish it:
+
+- :func:`_rewrite_partitions`, copy-on-write: MERGE, sync, CDC apply,
+  the copy-on-write DELETE and UPDATE, partial OPTIMIZE and
+  ``io.transaction.Transaction``;
+- :func:`_commit_vectors`, merge-on-read: the vector DELETE and UPDATE;
+- :func:`_commit_whole_table`, a fresh whole table: create
+  (:func:`init_table`) and full OPTIMIZE (:func:`compact_versioned`);
+- :func:`_republish`, no data moved: :func:`restore_version` and
+  :func:`fast_forward`.
+
+:func:`alter_table_columns` and :func:`merge_branch` write no data and
+assemble their manifests themselves.
+
 The manifest optionally carries **zone maps** — per-partition min/max for
 chosen non-partition columns (``stats_cols``), recorded at write time and
 maintained under the same ownership rules as the partition mapping.  A
@@ -51,6 +66,7 @@ import json
 import math
 import os
 import re
+import shutil
 import tempfile
 import time
 
@@ -1127,6 +1143,31 @@ def init_table(
     if bloom_cols:
         _validate_bloom_cols(df, bloom_cols)
     os.makedirs(root, exist_ok=True)
+    _commit_whole_table(
+        spark, root, partition_col, df, "create",
+        stats_cols or None, bloom_cols or None, constraints or None,
+    )
+
+
+def _commit_whole_table(
+    spark: SparkSession,
+    root: str,
+    partition_col: str,
+    df: DataFrame,
+    operation: str,
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None,
+    constraints: dict[str, str] | None,
+    base_version: int | None = None,
+) -> int:
+    """The one whole-table commit, for :func:`init_table` (create,
+    ``base_version`` None: unchecked) and :func:`compact_versioned` (full
+    OPTIMIZE, checked against ``base_version``): claim, write ``df``, one
+    :func:`_written_metadata` pass choosing the bloom geometry afresh, and
+    a fresh manifest — nothing carries over; zone maps / blooms are
+    recorded for a non-None ``stats_cols`` / ``bloom_cols``.  A NULL
+    partition shows only once written, so its refusal first removes the
+    claimed directory and releases the claim (ADVICE r7)."""
     v = _claim_version(root)
     vdir = version_dir(root, v)
     df.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
@@ -1135,22 +1176,29 @@ def init_table(
     counts, stats, blooms, geometry = _written_metadata(
         spark, vdir, partition_col, schema, stats_cols or [], bloom_cols or []
     )
-    _require_non_null_partitions(counts)
+    if None in counts:
+        shutil.rmtree(vdir, ignore_errors=True)
+        _release_claim(root, v)
+        _require_non_null_partitions(counts)
     manifest = {
         "version": v,
         "partitions": {p: v for p in sorted(counts)},
-        "operation": "create",
+        "operation": operation,
         "schema": schema,
         "rows": counts,
     }
-    if constraints:
-        manifest["constraints"] = dict(constraints)
-    if stats_cols:
+    if constraints is not None:
+        manifest["constraints"] = constraints
+    if stats_cols is not None:
         manifest["stats"] = stats
-    if bloom_cols:
+    if bloom_cols is not None:
         manifest["bloom"] = blooms
         manifest["bloom_geometry"] = {"m": geometry[0], "k": geometry[1]}
-    _commit_manifest(root, manifest)
+    if base_version is None:
+        _commit_manifest(root, manifest)
+    else:
+        _commit_checked(root, manifest, base_version)
+    return v
 
 
 def read_snapshot(
@@ -1754,44 +1802,121 @@ def cdc_apply_versioned(
     )
 
 
-def _check_vector_keys(manifest: dict, key_cols: list[str]) -> None:
-    """A merge-on-read commit's ``key_cols`` must match the key columns
-    the table's existing deletion vectors were written with."""
-    old_dv = manifest.get("dv")
+def _commit_vectors(
+    spark: SparkSession,
+    root: str,
+    partition_col: str,
+    manifest: dict,
+    doomed: DataFrame,
+    key_cols: list[str],
+    operation: str,
+    *,
+    replacement: DataFrame | None = None,
+    ref: str | None = None,
+    commit_hook=None,
+) -> int:
+    """The one merge-on-read commit, for the merge-on-read arms of
+    :func:`delete_from_versioned` and :func:`update_versioned`: a deletion
+    vector of ``doomed``'s ``(partition, key)`` tuples plus, for an UPDATE,
+    the ``replacement`` rows as an append-delta — no partition rewrites.
+
+    Before the claim (ADVICE r7): ``key_cols`` must match the existing
+    vectors', one collect counts the doomed rows per partition (NULL
+    refused, none commits nothing), and the replacement's CHECK
+    constraints validate.  Then claim, the ``_dv`` write, the ``_append``
+    write widening rows / zone maps / blooms, ``dv`` and ``appends``
+    growth, ``commit_hook`` (tests only) and the checked commit."""
+    old_dv = manifest.get("dv") or {}
     if old_dv and old_dv["key_cols"] != list(key_cols):
         raise ValueError(
             f"table vectors are keyed by {old_dv['key_cols']}; "
             f"got {list(key_cols)}"
         )
-
-
-def _vector_counts(df: DataFrame, partition_col: str) -> dict[str, int]:
-    """{partition: rows} of the rows a merge-on-read commit deletes, in
-    one collect; NULL partitions are refused.  Grouped by the Spark string
-    rendering: these keys become the manifest's dv/appends/deleted keys
-    and must match the hive encoding the read path compares against (see
-    :func:`_collect_partition_strings`)."""
-    rows = (
-        df.groupBy(F.col(partition_col).cast("string").alias(partition_col))
+    # {partition: doomed rows} grouped by the Spark string rendering: the
+    # keys become the manifest's dv/appends/rows keys and must match the
+    # hive encoding the read path compares against (see
+    # _collect_partition_strings)
+    got = (
+        doomed.groupBy(F.col(partition_col).cast("string").alias(partition_col))
         .count()
         .collect()
     )
-    _require_non_null_partitions([r[0] for r in rows])
-    return {r[0]: int(r[1]) for r in rows}
+    _require_non_null_partitions([r[0] for r in got])
+    counts = {r[0]: int(r[1]) for r in got}
+    if not counts:
+        return manifest["version"]  # nothing matched: no empty commit
+    if replacement is not None and manifest.get("constraints"):
+        replacement = replacement.localCheckpoint(eager=False)
+        _check_constraints(replacement, manifest["constraints"])
 
-
-def _grow_vectors(
-    manifest: dict, key_cols: list[str], counts: dict[str, int], v: int
-) -> dict:
-    """The manifest's ``dv`` record after commit ``v`` writes one vector
-    file covering ``counts`` deleted rows per partition."""
-    old_dv = manifest.get("dv") or {}
+    v = _claim_version(root)
+    doomed.select(partition_col, *key_cols).write.mode("overwrite").parquet(
+        _dv_dir(root, v)
+    )
+    new_manifest = dict(manifest)
+    new_manifest["version"] = v
+    new_manifest["operation"] = operation
     files = {p: list(vs) for p, vs in old_dv.get("files", {}).items()}
     deleted = dict(old_dv.get("deleted", {}))
     for p, n in counts.items():
         files.setdefault(p, []).append(v)
         deleted[p] = int(deleted.get(p, 0)) + n
-    return {"key_cols": list(key_cols), "files": files, "deleted": deleted}
+    new_manifest["dv"] = {
+        "key_cols": list(key_cols), "files": files, "deleted": deleted
+    }
+    if replacement is not None:
+        adir = _append_dir(root, v)
+        replacement.write.mode("overwrite").partitionBy(partition_col).parquet(adir)
+        spark.catalog.refreshByPath(adir)
+        ap = {p: list(vs) for p, vs in (manifest.get("appends") or {}).items()}
+        for p in counts:
+            ap.setdefault(p, []).append(v)
+        new_manifest["appends"] = ap
+        if manifest.get("rows"):
+            # physical rows grow by the appended replacements; the matching
+            # dv['deleted'] growth keeps the metadata-only logical count
+            # (rows − deleted) invariant, as UPDATE must be.  A partition
+            # with no recorded count stays unrecorded (still incomplete).
+            new_manifest["rows"] = {
+                p: int(n) + counts[p] if p in counts else n
+                for p, n in manifest["rows"].items()
+            }
+        old_stats = manifest.get("stats") or {}
+        old_blooms = manifest.get("bloom") or {}
+        if old_stats or old_blooms:
+            # the appended rows' filters OR into the existing bitmaps, so
+            # they MUST be built at the table's recorded geometry
+            _n, add, addb, _g = _written_metadata(
+                spark, adir, partition_col, _schema_record(replacement),
+                sorted(next(iter(old_stats.values()), {})),
+                _bloom_col_union(old_blooms),
+                _manifest_bloom_geometry(manifest),
+            )
+        if old_stats:
+            new_manifest["stats"] = {
+                p: _widen_partition_stats(st, add[p]) if p in add else st
+                for p, st in old_stats.items()
+            }
+        if old_blooms:
+            # a column whose appended rows are all NULL has no entry in the
+            # append bloom — NULL never matches an equality probe, so the
+            # existing filter stands unchanged (indexing addb[p][c] directly
+            # would crash the commit after the data writes)
+            new_manifest["bloom"] = {
+                p: {
+                    c: _or_bloom_hex(bm[c], addb[p][c])
+                    if c in addb.get(p, {})
+                    else bm[c]
+                    for c in bm
+                }
+                if p in addb
+                else bm
+                for p, bm in old_blooms.items()
+            }
+    if commit_hook is not None:
+        commit_hook()
+    _commit_checked(root, new_manifest, manifest["version"], ref=ref)
+    return v
 
 
 def delete_from_versioned(
@@ -1834,24 +1959,10 @@ def delete_from_versioned(
     if mode == "merge_on_read":
         if not key_cols:
             raise ValueError("merge_on_read delete requires key_cols")
-        _check_vector_keys(manifest, key_cols)
-        doomed = target.filter(condition)
-        counts = _vector_counts(doomed, partition_col)
-        if not counts:
-            return manifest["version"]  # nothing to delete: no commit
-
-        v = _claim_version(root)
-        doomed.select(partition_col, *key_cols).write.mode("overwrite").parquet(
-            _dv_dir(root, v)
+        return _commit_vectors(
+            spark, root, partition_col, manifest, target.filter(condition),
+            key_cols, "delete_mor", ref=ref, commit_hook=commit_hook,
         )
-        new_manifest = dict(manifest)
-        new_manifest["version"] = v
-        new_manifest["operation"] = "delete_mor"
-        new_manifest["dv"] = _grow_vectors(manifest, key_cols, counts, v)
-        if commit_hook is not None:
-            commit_hook()
-        _commit_checked(root, new_manifest, manifest["version"], ref=ref)
-        return v
 
     affected = _collect_partition_strings(
         target.filter(condition).select(partition_col).distinct(), partition_col
@@ -1931,9 +2042,34 @@ def update_versioned(
     cond_true = F.coalesce(condition.cast("boolean"), F.lit(False))
     matched = target.filter(cond_true)
     if mode == "merge_on_read":
-        return _update_merge_on_read(
-            spark, root, partition_col, manifest, matched, set_exprs,
-            schema, data_cols, key_cols, ref, commit_hook,
+        if not key_cols:
+            raise ValueError("merge_on_read update requires key_cols")
+        frozen = [c for c in set_exprs if c == partition_col or c in key_cols]
+        if frozen:
+            raise ValueError(
+                f"merge_on_read UPDATE cannot reassign partition/key columns "
+                f"{sorted(frozen)}; use mode='copy_on_write'"
+            )
+        # materialize the matched set once: the vector write, the count, and
+        # the replacement write would otherwise each re-run the snapshot
+        # scan + predicate (and diverge under a nondeterministic predicate);
+        # the checkpoint is O(updated rows) — exactly what this commit
+        # writes anyway.  Lazy: the kernel's count aggregate materializes
+        # it inside its own job — one driver action per commit instead of
+        # two (guide §5)
+        matched = matched.localCheckpoint(eager=False)
+        return _commit_vectors(
+            spark, root, partition_col, manifest, matched, key_cols,
+            "update_mor",
+            replacement=matched.select(
+                *[
+                    set_exprs[c].cast(schema[c]).alias(c)
+                    if c in set_exprs
+                    else F.col(c)
+                    for c in data_cols
+                ]
+            ),
+            ref=ref, commit_hook=commit_hook,
         )
     old_homes = matched.select(partition_col).distinct()
     if partition_col in set_exprs:
@@ -1962,119 +2098,6 @@ def update_versioned(
         ),
         "update", ref=ref, commit_hook=commit_hook,
     )
-
-
-def _update_merge_on_read(
-    spark: SparkSession,
-    root: str,
-    partition_col: str,
-    manifest: dict,
-    matched: DataFrame,
-    set_exprs: dict,
-    schema: dict,
-    data_cols: list[str],
-    key_cols: list[str] | None,
-    ref: str | None,
-    commit_hook,
-) -> int:
-    """The merge-on-read arm of :func:`update_versioned`: deletion
-    vector for the matched rows' pre-images + append-delta of their
-    replacements, one atomic commit, no partition rewrites."""
-    if not key_cols:
-        raise ValueError("merge_on_read update requires key_cols")
-    frozen = [c for c in set_exprs if c == partition_col or c in key_cols]
-    if frozen:
-        raise ValueError(
-            f"merge_on_read UPDATE cannot reassign partition/key columns "
-            f"{sorted(frozen)}; use mode='copy_on_write'"
-        )
-    _check_vector_keys(manifest, key_cols)
-    # materialize the matched set once: the vector write, the count, and
-    # the replacement write below would otherwise each re-run the
-    # snapshot scan + predicate (and diverge under a nondeterministic
-    # predicate); the checkpoint is O(updated rows) — exactly what this
-    # commit writes anyway.  Lazy: the count aggregate that immediately
-    # follows materializes it inside its own job — one driver action per
-    # commit instead of two (guide §5)
-    matched = matched.localCheckpoint(eager=False)
-    counts = _vector_counts(matched, partition_col)
-    if not counts:
-        return manifest["version"]  # nothing matched: no empty commit
-
-    replacement = matched.select(
-        *[
-            set_exprs[c].cast(schema[c]).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in data_cols
-        ]
-    )
-    if manifest.get("constraints"):
-        replacement = replacement.localCheckpoint(eager=False)
-        _check_constraints(replacement, manifest["constraints"])
-
-    v = _claim_version(root)
-    matched.select(partition_col, *key_cols).write.mode("overwrite").parquet(
-        _dv_dir(root, v)
-    )
-    adir = _append_dir(root, v)
-    replacement.write.mode("overwrite").partitionBy(partition_col).parquet(adir)
-    spark.catalog.refreshByPath(adir)
-
-    new_manifest = dict(manifest)
-    new_manifest["version"] = v
-    new_manifest["operation"] = "update_mor"
-    new_manifest["dv"] = _grow_vectors(manifest, key_cols, counts, v)
-    ap = {p: list(vs) for p, vs in (manifest.get("appends") or {}).items()}
-    for p in counts:
-        ap.setdefault(p, []).append(v)
-    new_manifest["appends"] = ap
-    if manifest.get("rows"):
-        # physical rows grow by the appended replacements; the matching
-        # dv['deleted'] growth keeps the metadata-only logical count
-        # (rows − deleted) invariant, as UPDATE must be.  A partition
-        # with no recorded count stays unrecorded (still incomplete).
-        rows = dict(manifest["rows"])
-        for p, n in counts.items():
-            if p in rows:
-                rows[p] = int(rows[p]) + n
-        new_manifest["rows"] = rows
-    old_stats = manifest.get("stats") or {}
-    old_blooms = manifest.get("bloom") or {}
-    if old_stats or old_blooms:
-        # the appended rows' filters OR into the existing bitmaps, so they
-        # MUST be built at the table's recorded geometry
-        _n, add, addb, _g = _written_metadata(
-            spark, adir, partition_col, _schema_record(replacement),
-            sorted(next(iter(old_stats.values()), {})),
-            _bloom_col_union(old_blooms),
-            _manifest_bloom_geometry(manifest),
-        )
-    if old_stats:
-        new_manifest["stats"] = {
-            p: _widen_partition_stats(st, add[p]) if p in add else st
-            for p, st in old_stats.items()
-        }
-    if old_blooms:
-        # a column whose appended rows are all NULL has no entry in the
-        # append bloom — NULL never matches an equality probe, so the
-        # existing filter stands unchanged (indexing addb[p][c] directly
-        # would crash the commit after the data writes)
-        new_manifest["bloom"] = {
-            p: {
-                c: _or_bloom_hex(bm[c], addb[p][c])
-                if c in addb.get(p, {})
-                else bm[c]
-                for c in bm
-            }
-            if p in addb
-            else bm
-            for p, bm in old_blooms.items()
-        }
-    if commit_hook is not None:
-        commit_hook()
-    _commit_checked(root, new_manifest, manifest["version"], ref=ref)
-    return v
 
 
 def alter_table_columns(
@@ -2295,43 +2318,20 @@ def compact_versioned(
         clustered = snap.repartitionByRange(
             n_ranges, F.col(partition_col), F.col(order_col)
         ).sortWithinPartitions(partition_col, order_col)
-    v = _claim_version(root)
-    vdir = version_dir(root, v)
-    (
-        clustered.write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(vdir)
-    )
-    spark.catalog.refreshByPath(vdir)
     old_stats = manifest.get("stats")
     old_blooms = manifest.get("bloom")
-    schema = _schema_record(snap)
     # compaction rewrites the WHOLE snapshot with no old bitmaps to
     # OR-merge against — the one point where re-sizing is free — so the
-    # bloom geometry is RE-CHOSEN (geometry None) instead of pinning the
-    # init-time choice: a table that grew past its initial key density
-    # escapes bloom saturation here (code-review r14)
-    counts, stats, blooms, geometry = _written_metadata(
-        spark, vdir, partition_col, schema,
-        sorted(next(iter(old_stats.values()))) if old_stats else [],
-        _bloom_col_union(old_blooms) if old_blooms else [],
+    # bloom geometry is RE-CHOSEN instead of pinning the init-time choice:
+    # a table that grew past its initial key density escapes bloom
+    # saturation here (code-review r14)
+    return _commit_whole_table(
+        spark, root, partition_col, clustered, "optimize",
+        sorted(next(iter(old_stats.values()))) if old_stats else None,
+        _bloom_col_union(old_blooms) if old_blooms else None,
+        manifest.get("constraints"),
+        base_version=manifest["version"],
     )
-    new_manifest = {
-        "version": v,
-        "partitions": {p: v for p in sorted(counts)},
-        "operation": "optimize",
-        "schema": schema,
-        "rows": counts,
-    }
-    if "constraints" in manifest:
-        new_manifest["constraints"] = manifest["constraints"]
-    if old_stats:
-        new_manifest["stats"] = stats
-    if old_blooms:
-        new_manifest["bloom"] = blooms
-        new_manifest["bloom_geometry"] = {"m": geometry[0], "k": geometry[1]}
-    _commit_checked(root, new_manifest, manifest["version"])
-    return v
 
 
 def vacuum(
@@ -2367,8 +2367,6 @@ def vacuum(
     claim markers are left in place too; the reported set is computed
     with the same TTL rule a real run would apply.)
     """
-    import shutil
-
     if retain_last < 1:
         raise ValueError("retain_last must be >= 1 (the current snapshot)")
     current = read_manifest(root)
@@ -2550,10 +2548,13 @@ def _rewrite_partitions(
     ref: str | None = None,
     commit_hook=None,
 ) -> int:
-    """The one copy-on-write commit: rewrite the ``affected`` partitions
-    (Spark-rendered values, see :func:`_collect_partition_strings`) of
-    ``base`` as ``resolve(hit)`` into a fresh version and publish it.
-    Callers: :func:`merge_into_versioned`, :func:`sync_versioned`,
+    """The one copy-on-write commit — one of the four commit tails beside
+    :func:`_commit_vectors` (merge-on-read DELETE/UPDATE),
+    :func:`_commit_whole_table` (create, full OPTIMIZE) and
+    :func:`_republish` (RESTORE, fast-forward): rewrite the ``affected``
+    partitions (Spark-rendered values, see
+    :func:`_collect_partition_strings`) of ``base`` as ``resolve(hit)``
+    into a fresh version and publish it.  Callers: :func:`merge_into_versioned`, :func:`sync_versioned`,
     :func:`cdc_apply_versioned`, the copy-on-write arms of
     :func:`delete_from_versioned` and :func:`update_versioned`,
     :func:`optimize_partitions` and ``io.transaction.Transaction.commit``
@@ -2800,20 +2801,31 @@ def restore_version(root: str, version: int) -> int:
                 "was vacuumed; only versions within the retention window "
                 "are restorable"
             )
-    v_new = _claim_version(root)
+    return _republish(
+        root, target, f"restore(v{version})", current["version"]
+    )
+
+
+#: Manifest fields a re-publish carries from its source snapshot.
+_REPUBLISHED = (
+    "stats", "bloom", "bloom_geometry", "schema", "rows", "constraints",
+    "dv", "appends", "fallback_roots", "renames", "adds",
+)
+
+
+def _republish(root: str, source: dict, operation: str, base_version: int) -> int:
+    """The one re-publish commit, for :func:`restore_version` and
+    :func:`fast_forward`: a new version re-referencing ``source``'s
+    directories and table metadata — no data moves."""
+    v = _claim_version(root)
     manifest = {
-        "version": v_new,
-        "partitions": dict(target["partitions"]),
-        "operation": f"restore(v{version})",
+        "version": v,
+        "partitions": dict(source["partitions"]),
+        "operation": operation,
     }
-    for extra in (
-        "stats", "bloom", "bloom_geometry", "schema", "rows", "constraints",
-        "dv", "appends", "fallback_roots", "renames", "adds",
-    ):
-        if extra in target:
-            manifest[extra] = target[extra]
-    _commit_checked(root, manifest, current["version"])
-    return v_new
+    manifest.update({k: source[k] for k in _REPUBLISHED if k in source})
+    _commit_checked(root, manifest, base_version)
+    return v
 
 
 def clone_table(src_root: str, dst_root: str) -> int:
@@ -2855,9 +2867,7 @@ def clone_table(src_root: str, dst_root: str) -> int:
     spec_src = os.path.join(src_root, SPEC_FILE)
     spec_dst = os.path.join(dst_root, SPEC_FILE)
     if os.path.exists(spec_src):
-        import shutil as _shutil
-
-        _shutil.copyfile(spec_src, spec_dst)
+        shutil.copyfile(spec_src, spec_dst)
     else:
         try:
             os.unlink(spec_dst)
@@ -3082,21 +3092,9 @@ def fast_forward(root: str, name: str) -> int:
     Returns the new main version.
     """
     head = read_manifest(root, ref=name)
-    base = head["branch_base"]
-    v_new = _claim_version(root)
-    manifest = {
-        "version": v_new,
-        "partitions": dict(head["partitions"]),
-        "operation": f"publish({name}@v{head['version']})",
-    }
-    for extra in (
-        "stats", "bloom", "bloom_geometry", "schema", "rows", "constraints",
-        "dv", "appends", "fallback_roots", "renames", "adds",
-    ):
-        if extra in head:
-            manifest[extra] = head[extra]
-    _commit_checked(root, manifest, base)
-    return v_new
+    return _republish(
+        root, head, f"publish({name}@v{head['version']})", head["branch_base"]
+    )
 
 
 def delete_branch(root: str, name: str) -> None:

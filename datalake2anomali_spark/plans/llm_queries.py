@@ -12,8 +12,6 @@ TRUE).  The same bounds are pinned pair-level in ``tests/test_llm.py``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,16 +42,7 @@ from ..llm.similarity import (
     embedding_neardup_exact,
     embedding_neardup_lsh,
 )
-from ..llm.text import (
-    fingerprint,
-    lang_id,
-    normalize_text,
-    pred_lang_col,
-    scrub_pii,
-    text_stats,
-    token_counts,
-    top_terms,
-)
+from ..llm.text import pred_lang_col, top_terms
 
 # Shared shingle CTE (4-gram word shingles, distinct, same construction as
 # llm.text.shingles_col).
@@ -80,73 +69,6 @@ DEDUP_EXACT_SQL = """
 SELECT min(doc_id) AS doc_id, COUNT(*) AS n_copies
 FROM documents GROUP BY text
 """
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_stats(load_table(spark, sf_dir, "documents"))
-
-
-TEXT_STATS_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks, length(text) AS n_chars
-  FROM documents
-),
-c AS (
-  SELECT doc_id,
-         CAST(len(toks) AS INTEGER) AS n_tokens,
-         CAST(n_chars AS INTEGER) AS n_chars,
-         CAST(len(list_filter(toks, x -> x IN ('the', 'a', 'and', 'of'))) AS INTEGER) AS n_stopwords
-  FROM t
-)
-SELECT doc_id, n_tokens, n_chars, n_stopwords,
-       CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_word_len,
-       CAST(n_stopwords AS DOUBLE) / n_tokens AS stop_ratio,
-       least(CAST(n_tokens AS DOUBLE) / CAST(64 AS DOUBLE), CAST(1 AS DOUBLE)) * CAST(0.5 AS DOUBLE)
-         + (CAST(1 AS DOUBLE) - CAST(n_stopwords AS DOUBLE) / n_tokens) * CAST(0.5 AS DOUBLE) AS quality
-FROM c
-"""
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lang_id(load_table(spark, sf_dir, "documents"))
-
-
-LANG_ID_SQL = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-),
-sc AS (
-  SELECT doc_id,
-         CAST(len(list_filter(toks, x -> x IN ('the', 'a', 'and', 'of'))) AS INTEGER) AS score_en,
-         CAST(len(list_filter(toks, x -> x IN ('der', 'die', 'das', 'und'))) AS INTEGER) AS score_de,
-         CAST(len(list_filter(toks, x -> x IN ('le', 'la', 'les', 'et'))) AS INTEGER) AS score_fr,
-         CAST(len(list_filter(toks, x -> x IN ('el', 'los', 'las', 'y'))) AS INTEGER) AS score_es
-  FROM t
-)
-SELECT doc_id, score_en, score_de, score_fr, score_es,
-       CASE WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es AND score_en > 0 THEN 'en'
-            WHEN score_de >= score_fr AND score_de >= score_es AND score_de > 0 THEN 'de'
-            WHEN score_fr >= score_es AND score_fr > 0 THEN 'fr'
-            WHEN score_es > 0 THEN 'es'
-            ELSE 'unknown' END AS pred_lang
-FROM sc
-"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return fingerprint(load_table(spark, sf_dir, "documents"))
-
-
-DOC_FINGERPRINT_SQL = (
-    _SHINGLE_CTE
-    + """
-SELECT s.doc_id,
-       md5(d.text) AS text_md5,
-       list_aggregate(list_transform(sh, x -> md5(x)), 'min') AS min_shingle_md5,
-       CAST(len(sh) AS INTEGER) AS n_shingles
-FROM s JOIN documents d ON s.doc_id = d.doc_id
-"""
-)
 
 
 #: Document-frequency cap for the registered exact-Jaccard query.  This is
@@ -230,40 +152,6 @@ r AS (
   FROM sims
 )
 SELECT query_id, rank, vec_id AS neighbor_id, sim FROM r WHERE rank <= 5
-"""
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return extract_features(with_binary_payload(docs))
-
-
-MULTIMODAL_SQL = """
-SELECT doc_id,
-       CAST(strlen(text) AS INTEGER) AS n_bytes,
-       CAST(strlen(text) % 640 AS INTEGER) AS fake_width,
-       CAST(strlen(text) % 480 AS INTEGER) AS fake_height,
-       md5(text) AS checksum
-FROM documents
-"""
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return token_counts(load_table(spark, sf_dir, "documents"))
-
-
-TOKEN_COUNTS_SQL = r"""
-WITH t AS (
-  SELECT doc_id,
-         string_split(text, ' ') AS ws,
-         regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]') AS bpe
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(ws) AS INTEGER) AS n_tokens_ws,
-       CAST(len(bpe) AS INTEGER) AS n_tokens_bpe,
-       CAST(len(list_distinct(bpe)) AS INTEGER) AS n_distinct_bpe,
-       CAST(len(list_distinct(bpe)) AS DOUBLE) / len(bpe) AS distinct_ratio
-FROM t
 """
 
 
@@ -675,9 +563,9 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, then every statistic reads those arrays — strictly cheaper than
     the seven standalone scans, still zero shuffles, fully codegen'd.
 
-    The normalization and scrub halves run over the same deterministically
-    dirtied inputs the standalone queries used (``q_normalize_text`` /
-    ``q_scrub_pii``), built inline as expressions both engines reproduce.
+    The normalization and scrub halves run over deterministically dirtied
+    inputs (a messy upper-cased copy and planted emails / IPs / digit runs),
+    built inline as expressions both engines reproduce.
     """
     from ..llm.text import (
         CONTROL_CHARS_RE,
@@ -1155,82 +1043,6 @@ f AS (
 )
 SELECT doc_id, n_matched, round(raw_score, 6) AS score
 FROM f WHERE n_matched > 0
-"""
-
-
-def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text normalization over deterministically-dirtied input.
-
-    The parquet corpus is already clean, so the query first degrades each
-    text (leading spaces, uppercasing, a control char, a messy suffix) with
-    expressions both engines reproduce, then asserts the codegen'd
-    normalize pass restores canonical form.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    messy = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("  "), F.upper("text"), F.lit("\x01"), F.lit(" EnD  ")
-        ).alias("text"),
-    )
-    return normalize_text(messy)
-
-
-NORMALIZE_TEXT_SQL = r"""
-WITH messy AS (
-  SELECT doc_id, '  ' || upper(text) || chr(1) || ' EnD  ' AS mt FROM documents
-),
-n AS (
-  SELECT doc_id,
-         trim(regexp_replace(lower(regexp_replace(mt, '[\x00-\x1f\x7f]', ' ', 'g')),
-                             '\s+', ' ', 'g')) AS norm_text,
-         mt
-  FROM messy
-)
-SELECT doc_id, norm_text,
-       CAST(length(norm_text) AS INTEGER) AS n_chars_norm,
-       (norm_text <> mt) AS changed
-FROM n
-"""
-
-
-def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over planted, doc_id-derived emails / IPs / digit runs —
-    the oracle regenerates the same plants and runs byte-identical RE2/Java
-    portable regexes, so redaction and counts are value-checked."""
-    docs = load_table(spark, sf_dir, "documents")
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com from 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".7 ref 99887766"),
-            F.col("doc_id").cast("string"),
-        ).alias("text"),
-    )
-    return scrub_pii(planted)
-
-
-SCRUB_PII_SQL = r"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact user' || doc_id || '@example.com from 10.0.'
-              || (doc_id % 256) || '.7 ref 99887766' || doc_id AS pt
-  FROM documents
-)
-SELECT doc_id,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(pt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-         '\b\d{7,}\b', '<NUM>', 'g') AS clean_text,
-       CAST(len(regexp_extract_all(pt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails,
-       CAST(len(regexp_extract_all(pt, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INTEGER) AS n_ips,
-       CAST(len(regexp_extract_all(pt, '\b\d{7,}\b')) AS INTEGER) AS n_long_nums
-FROM planted
 """
 
 

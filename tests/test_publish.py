@@ -1059,11 +1059,14 @@ def test_commit_lock_steal_mid_commit_aborts_loser(spark, sf_dir, vtable):
     os.unlink(os.path.join(vtable, "_COMMIT.lock"))
 
 
-def test_null_partition_rejected_before_any_claim(spark, sf_dir, vtable):
+def test_null_partition_rejected_before_any_claim(
+    spark, sf_dir, vtable, tmp_path
+):
     """ADVICE r7: a source with NULL partition values must be refused
     BEFORE a version directory is claimed — a post-write rejection leaves
     an orphan _v{N} dir whose live claim marker blocks vacuum for the
-    whole claim TTL."""
+    whole claim TTL.  A create sees the NULL only once written, so it
+    must take back its claim before refusing."""
     from datalake2anomali_spark.io.publish import cdc_apply_versioned
 
     before = sorted(os.listdir(vtable))
@@ -1081,6 +1084,10 @@ def test_null_partition_rejected_before_any_claim(spark, sf_dir, vtable):
             "event_date",
         )
     assert sorted(os.listdir(vtable)) == before
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(ValueError, match="non-NULL partition"):
+        init_table(spark, bad, fresh, "event_date")
+    assert os.listdir(fresh) == []  # no _v1 dir, no _CLAIM.v1
 
 
 def test_sync_versioned_unconditional_replicates_source(spark, sf_dir, vtable):
@@ -2125,6 +2132,111 @@ def test_rewrite_kernel_constraint_leaves_no_claim(
 
     with pytest.raises(ConstraintViolationError, match="p3_frozen"):
         _kernel_verb(spark, root, verb)
+    assert sorted(os.listdir(root)) == listing
+    assert read_manifest(root)["version"] == m["version"]
+
+
+# -- the shared merge-on-read kernel ------------------------------------------
+#
+# Both merge-on-read verbs commit through publish._commit_vectors, on the
+# same table as the copy-on-write kernel above: each deletes (or replaces)
+# one p3 row by vector; no partition rewrites.
+
+#: verb -> (upserted {id: v}, deleted ids); every touched id lives in p3.
+_VECTOR_MODEL = {"delete_mor": ({}, {15}), "update_mor": ({11: 1111}, set())}
+
+
+def _vector_verb(spark, root, verb):
+    """Run merge-on-read ``verb`` against p3; return the published version."""
+    from datalake2anomali_spark.io.publish import (
+        delete_from_versioned,
+        update_versioned,
+    )
+
+    if verb == "delete_mor":
+        return delete_from_versioned(
+            spark, root, "p", F.col("id") == 15,
+            mode="merge_on_read", key_cols=["id"],
+        )
+    assert verb == "update_mor"
+    return update_versioned(
+        spark, root, "p", F.col("id") == 11, {"v": F.lit(1111)},
+        mode="merge_on_read", key_cols=["id"],
+    )
+
+
+@pytest.mark.parametrize("verb", sorted(_VECTOR_MODEL))
+def test_vector_kernel_contract(spark, kernel_base, tmp_path, verb):
+    """The commit contract both merge-on-read verbs share: no partition
+    changes its version, p3 gains one vector file covering the matched
+    row (and, for UPDATE, one append-delta with rows, zone map and bloom
+    widened over it), p0-p2 keep their metadata, and the snapshot and its
+    metadata-only count match a model of the verb."""
+    import shutil
+
+    from datalake2anomali_spark.io.publish import snapshot_rowcount
+
+    root = str(tmp_path / "t")
+    shutil.copytree(kernel_base, root)
+    before = read_manifest(root)
+    upserts, deletes = _VECTOR_MODEL[verb]
+    model = {i: (v, p) for i, v, p in _rows(spark, root) if i not in deletes}
+    model.update({i: (v, "p3") for i, v in upserts.items()})
+
+    nv = _vector_verb(spark, root, verb)
+
+    m = read_manifest(root)
+    assert m["version"] == nv > before["version"]
+    assert m["partitions"] == before["partitions"]
+    assert m["dv"]["files"]["p3"] == before["dv"]["files"]["p3"] + [nv]
+    assert m["dv"]["deleted"]["p3"] == before["dv"]["deleted"]["p3"] + 1
+    if verb == "update_mor":
+        assert m["appends"]["p3"] == before["appends"]["p3"] + [nv]
+        assert m["rows"]["p3"] == before["rows"]["p3"] + 1
+        lo, hi = before["stats"]["p3"]["v"]
+        assert m["stats"]["p3"]["v"] == [min(lo, 1111), max(hi, 1111)]
+    else:
+        assert m["appends"]["p3"] == before["appends"]["p3"]
+        assert m["rows"]["p3"] == before["rows"]["p3"]
+        assert m["stats"]["p3"] == before["stats"]["p3"]
+    # the replacement keeps its key, so its bloom bits were already set
+    assert m["bloom"]["p3"] == before["bloom"]["p3"]
+    for p in ("p0", "p1", "p2"):
+        assert m["rows"][p] == before["rows"][p], p
+        assert m["stats"][p] == before["stats"][p], p
+        assert m["bloom"][p] == before["bloom"][p], p
+    assert m["dv"]["files"]["p1"] == before["dv"]["files"]["p1"]
+    assert m["dv"]["deleted"]["p1"] == before["dv"]["deleted"]["p1"]
+    assert m["appends"]["p1"] == before["appends"]["p1"]
+
+    got = _rows(spark, root)
+    assert got == sorted((i, v, p) for i, (v, p) in model.items())
+    assert snapshot_rowcount(root) == len(got)
+
+
+def test_vector_kernel_constraint_leaves_no_claim(spark, kernel_base, tmp_path):
+    """A merge-on-read UPDATE whose replacement rows fail a CHECK
+    constraint is refused before any version is claimed: no ``_v{N}``
+    directory, no ``_CLAIM`` marker (the constraint is recorded straight
+    into the manifest, as in the copy-on-write case above)."""
+    import json
+    import shutil
+
+    from datalake2anomali_spark.io.publish import (
+        MANIFEST,
+        ConstraintViolationError,
+    )
+
+    root = str(tmp_path / "t")
+    shutil.copytree(kernel_base, root)
+    m = read_manifest(root)
+    m["constraints"] = {"p3_frozen": "p <> 'p3'"}
+    with open(os.path.join(root, MANIFEST), "w", encoding="utf-8") as fh:
+        json.dump(m, fh)
+    listing = sorted(os.listdir(root))
+
+    with pytest.raises(ConstraintViolationError, match="p3_frozen"):
+        _vector_verb(spark, root, "update_mor")
     assert sorted(os.listdir(root)) == listing
     assert read_manifest(root)["version"] == m["version"]
 
